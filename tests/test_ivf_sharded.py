@@ -126,57 +126,6 @@ def test_empty_input(spark, built):
     assert ivf_assign_sharded(empty, path).count() == 0
 
 
-def test_train_sharded_matches_distributed_trainer(spark, tmp_path):
-    # probe-all sharded E-step + the same fixed-point M-step + the same
-    # init and empty-cell carry => centroids equal ivf_train_distributed's
-    # bit-for-bit (random corpus: argmin margins dwarf matmul ulp)
-    from tmframe_spark.vec.similarity import ivf_train_distributed, ivf_train_sharded
-
-    emb = _corpus(spark, n=200, dim=8, seed=3)
-    ref = ivf_train_distributed(emb, nlist=8, iters=2)
-    ivf_train_sharded(
-        emb, str(tmp_path / "w"), nlist=8, iters=2, p_probe=3, n_coarse=3
-    )
-    rows = spark.read.parquet(str(tmp_path / "w" / "centroids" / "iter=1")).collect()
-    got = {r["cell"]: list(r["centroid"]) for r in rows}
-    assert got == {i: ref[i] for i in range(8)}
-
-
-def test_train_sharded_resume_equals_direct(spark, tmp_path):
-    from tmframe_spark.vec.similarity import ivf_train_sharded
-
-    emb = _corpus(spark, n=150, dim=8, seed=5)
-    ivf_train_sharded(emb, str(tmp_path / "a"), nlist=6, iters=2, p_probe=3, n_coarse=3)
-    # resumed: one committed iteration, then continue to 2
-    ivf_train_sharded(emb, str(tmp_path / "b"), nlist=6, iters=1, p_probe=3, n_coarse=3)
-    p = ivf_train_sharded(emb, str(tmp_path / "b"), nlist=6, iters=2, p_probe=3, n_coarse=3)
-    direct = {
-        r["cell"]: list(r["centroid"])
-        for r in spark.read.parquet(str(tmp_path / "a" / "centroids" / "iter=1")).collect()
-    }
-    resumed = {
-        r["cell"]: list(r["centroid"])
-        for r in spark.read.parquet(str(tmp_path / "b" / "centroids" / "iter=1")).collect()
-    }
-    assert resumed == direct
-    assert p.endswith("iter=1")
-
-
-def test_init_centroids_matches_collect_rule(spark):
-    from tmframe_spark.vec.similarity import ivf_init_centroids
-
-    emb = _corpus(spark, n=30, dim=4, seed=9)
-    got = {
-        r["cell"]: list(r["centroid"])
-        for r in ivf_init_centroids(emb, 5).collect()
-    }
-    ref = {
-        i: [float(x) for x in r["embedding"]]
-        for i, r in enumerate(emb.orderBy("vec_id").limit(5).collect())
-    }
-    assert got == ref
-
-
 # --- round-5 advice fixes --------------------------------------------------
 
 

@@ -209,3 +209,43 @@ def test_pack_rejects_non_utc_session(spark):
             pack_rollup_blocks(rolled, "1m", "day")
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_pack_carry_spanning_many_arrow_batches_bytes_identical(spark):
+    """A conversation that spans many Arrow batches is buffered piecewise
+    and concatenated once when a batch closes it (or at end of stream) —
+    the blocks must be byte-identical to the one-batch pack, on the fused,
+    compositional and split-dense paths alike."""
+    import pandas as pd
+
+    rows = []
+    for conv, days, stride in [
+        ("conv-a", 1, 97),
+        ("conv-long", 3, 1),  # 4,320 rows: > 60 batches of 64 rows
+        ("conv-m", 1, 211),
+        ("conv-tail", 2, 1),  # the partition's last conv: end-of-stream path
+    ]:
+        for m in range(0, days * 1440, stride):
+            ts = pd.Timestamp("2024-03-01") + pd.Timedelta(minutes=m)
+            rows.append((conv, ts.to_pydatetime(), 1 + m % 5, m * 3 + 1, 0, 0, 0))
+    rolled = spark.createDataFrame(
+        rows,
+        "conv_id string, bucket timestamp, turns long, token_volume long, "
+        "tool_calls long, user_turns long, assistant_turns long",
+    ).coalesce(1)
+    ref = _rows_dict(pack_rollup_blocks(rolled, "1m", "day"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "64")
+        fused = _rows_dict(pack_rollup_blocks(rolled, "1m", "day"))
+        split = _rows_dict(
+            pack_rollup_blocks(rolled, "1m", "day", split_dense_rows=1000)
+        )
+        comp = blocks_dict(compositional(rolled, "1m", "day"), "grp")
+    finally:
+        spark.conf.set(key, old)
+    assert sum(1 for c, _ in ref if c == "conv-long") == 3
+    assert fused == ref
+    assert split == ref
+    assert comp == {k: (v[4], v[0]) for k, v in ref.items()}

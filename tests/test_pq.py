@@ -1,20 +1,11 @@
 """Product quantization (vec/pq.py): exactness when reconstruction is
 lossless, recall vs the exact cosine baseline on the driver embeddings,
-written-index parity, determinism, and geometry validation."""
+persisted IVF+PQ index parity, determinism, and geometry validation."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
-
 from tests.conftest import SF_DIR
-from tmframe_spark.vec.pq import (
-    ivf_pq_topk,
-    pq_build_index,
-    pq_encode,
-    pq_topk,
-    pq_topk_from_index,
-    pq_train,
-)
+from tmframe_spark.vec.pq import pq_encode, pq_topk, pq_train
 from tmframe_spark.vec.similarity import cosine_topk
 
 
@@ -95,25 +86,6 @@ def test_pq_codes_are_m_bytes_and_training_deterministic(emb):
     assert lens == [8]
 
 
-def test_pq_written_index_matches_inline(emb, tmp_path, spark):
-    path = str(tmp_path / "pq_index")
-    books = pq_build_index(emb, path, m=8, ksub=16, iters=2)
-    qv = emb.where("vec_id = 3").collect()[0]["embedding"]
-    served = _rows(pq_topk_from_index(spark, path, books, qv, k=10, exclude_id=3))
-    inline = _rows(pq_topk(pq_encode(emb, books), books, qv, k=10, exclude_id=3))
-    assert served == inline and len(served) == 10
-
-
-def test_ivf_pq_all_probes_equals_full_pq_scan(emb):
-    """nprobe == nlist probes every cell, so the composed IVF+PQ result
-    must equal the plain PQ scan with the same codebooks."""
-    full = _rows(ivf_pq_topk(emb, query_id=0, k=10, nlist=4, nprobe=4, m=8, ksub=16))
-    books = pq_train(emb, m=8, ksub=16, iters=3)
-    qv = emb.where("vec_id = 0").collect()[0]["embedding"]
-    plain = _rows(pq_topk(pq_encode(emb, books), books, qv, k=10, exclude_id=0))
-    assert full == plain
-
-
 def test_pq_geometry_validation(spark, emb):
     with pytest.raises(ValueError, match="equal subspaces"):
         pq_train(emb, m=7)
@@ -127,64 +99,6 @@ def test_pq_geometry_validation(spark, emb):
     books = pq_train(emb, m=8, ksub=16, iters=1)
     assert pq_encode(empty, books).count() == 0
     assert pq_topk(pq_encode(empty, books), books, [0.0] * 64, k=5).count() == 0
-
-
-# --- distributed full-corpus trainer (round-5 verdict next #2) ------------
-
-
-def test_pq_train_distributed_bit_equals_sample_twin(emb):
-    # corpus fits inside pq_train's sample (sf0.001 embeddings) => the two
-    # trainers see the SAME rows, share the init rule, and the fixed-point
-    # M-step is order-free integer sums + two exact IEEE ops => bit-equal
-    from tmframe_spark.vec.pq import pq_train_distributed
-
-    n = emb.count()
-    ref = pq_train(emb, m=8, ksub=16, iters=2, sample_cap=n)
-    stats = []
-    got = pq_train_distributed(emb, m=8, ksub=16, iters=2, stats_out=stats)
-    assert got == ref
-    # the per-iteration driver collect is codebook-shaped, never corpus-shaped
-    dim = len(emb.select("embedding").limit(1).collect()[0][0])
-    assert all(s <= dim * 16 for s in stats) and len(stats) == 2
-
-
-def test_pq_train_distributed_partitioning_invariant(emb):
-    from tmframe_spark.vec.pq import pq_train_distributed
-
-    a = pq_train_distributed(emb.repartition(3), m=4, ksub=8, iters=2)
-    b = pq_train_distributed(emb.repartition(11), m=4, ksub=8, iters=2)
-    assert a == b
-
-
-def test_pq_train_distributed_past_the_sample_cap(emb, monkeypatch):
-    # shrink the collect cap so the driver-sample twin REFUSES the corpus;
-    # the distributed trainer must still train (and on this corpus — which
-    # equals the untouched twin's sample — reproduce its codebooks exactly)
-    from tmframe_spark.vec import pq as pqmod
-    from tmframe_spark.vec.pq import pq_train_distributed
-
-    n = emb.count()
-    ref = pq_train(emb, m=4, ksub=8, iters=1, sample_cap=n)
-    dim = len(emb.select("embedding").limit(1).collect()[0][0])
-    monkeypatch.setattr(pqmod, "PQ_TRAIN_ELEMENT_CAP", dim * 8 + 1)
-    with pytest.raises(ValueError, match="pq_train would collect"):
-        pq_train(emb, m=4, ksub=8, iters=1, sample_cap=n)
-    assert pq_train_distributed(emb, m=4, ksub=8, iters=1) == ref
-
-
-def test_pq_build_index_full_corpus_matches_sample_trainer(emb, tmp_path, spark):
-    # sf0.001 corpus <= sample => identical codebooks => identical codes and
-    # identical serving results through the written index
-    n = emb.count()
-    books_s = pq_build_index(emb, str(tmp_path / "s"), m=8, ksub=16, iters=2)
-    books_f = pq_build_index(
-        emb, str(tmp_path / "f"), m=8, ksub=16, iters=2, full_corpus=True
-    )
-    assert books_f == books_s
-    qv = [float(x) for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
-    a = _rows(pq_topk_from_index(spark, str(tmp_path / "s"), books_s, qv, k=5))
-    b = _rows(pq_topk_from_index(spark, str(tmp_path / "f"), books_f, qv, k=5))
-    assert a == b
 
 
 # --- ADC shortlist + exact re-rank (round-6; Jégou et al. IV.RE-RANKING) ---
@@ -319,24 +233,6 @@ def test_ivfpq_refine_probe_all_bit_equals_exact_scan(emb, tmp_path, spark):
     assert [(r["vec_id"], r["cosine"]) for r in served.collect()] == exact
 
 
-def test_ivfpq_full_corpus_build_matches_sample_build(emb, tmp_path, spark):
-    # sf0.001 corpus <= both trainers' sample/init rules => the distributed
-    # build's quantizers and served results equal the driver-sample build's
-    from tmframe_spark.vec.pq import ivfpq_build_index, ivfpq_topk_from_index
-
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    ca, ba = ivfpq_build_index(emb, a, nlist=4, m=4, ksub=8, iters=1)
-    cb, bb = ivfpq_build_index(
-        emb, b, nlist=4, m=4, ksub=8, iters=1, full_corpus=True
-    )
-    assert [[float(x) for x in c] for c in ca] == [[float(x) for x in c] for c in cb]
-    assert ba == bb
-    qv = [float(x) for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
-    ra = _rows(ivfpq_topk_from_index(spark, a, qv, k=5, nprobe=2, exclude_id=0))
-    rb = _rows(ivfpq_topk_from_index(spark, b, qv, k=5, nprobe=2, exclude_id=0))
-    assert ra == rb
-
-
 # --- residual encoding (round-6; true IVFADC, Jégou et al. §IV.A) ----------
 
 
@@ -349,14 +245,14 @@ def test_ivfpq_residual_zero_residual_bit_equals_exact(spark, tmp_path):
     from tests.test_pq import _grid_corpus
     from tmframe_spark.vec.pq import (
         ivfpq_build_index,
-        ivfpq_load_flags,
+        ivfpq_read_meta,
         ivfpq_topk_from_index,
     )
 
     df = _grid_corpus(spark, n=64, m=2, dsub=4, ksub=4)
     path = str(tmp_path / "ivfpq_res")
     ivfpq_build_index(df, path, nlist=16, m=2, ksub=4, iters=3, residual=True)
-    assert ivfpq_load_flags(spark, path)["residual"] is True
+    assert ivfpq_read_meta(path)["residual"] is True
     exact = _rows(cosine_topk(df, query_id=0, k=10))
     served = _rows(
         ivfpq_topk_from_index(spark, path, 
@@ -406,25 +302,6 @@ def test_ivfpq_residual_adc_recall_not_worse_than_plain(emb, tmp_path, spark):
         }
         got[name] = len(exact & ids) / 10
     assert got["residual"] >= got["plain"], got
-
-
-def test_ivfpq_residual_full_corpus_build_matches_sample_build(emb, tmp_path, spark):
-    # residual + full_corpus: BOTH quantizers distributed, residual
-    # codebooks trained by pq_train_distributed over the residual column —
-    # on an in-sample corpus the build equals the driver-sample build
-    from tmframe_spark.vec.pq import ivfpq_build_index, ivfpq_topk_from_index
-
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    ca, ba = ivfpq_build_index(emb, a, nlist=4, m=4, ksub=8, iters=1, residual=True)
-    cb, bb = ivfpq_build_index(
-        emb, b, nlist=4, m=4, ksub=8, iters=1, residual=True, full_corpus=True
-    )
-    assert [[float(x) for x in c] for c in ca] == [[float(x) for x in c] for c in cb]
-    assert ba == bb
-    qv = [float(x) for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
-    ra = _rows(ivfpq_topk_from_index(spark, a, qv, k=5, nprobe=2, exclude_id=0))
-    rb = _rows(ivfpq_topk_from_index(spark, b, qv, k=5, nprobe=2, exclude_id=0))
-    assert ra == rb
 
 
 # --- incremental append (round-6; the nightly-embedding-ingest form) -------
@@ -501,52 +378,30 @@ def test_ivfpq_append_crash_and_replay_semantics(emb, tmp_path, spark):
     assert ivfpq_vacuum(path) == []
 
 
-# --- batched multi-query serving (round-6) ----------------------------------
+# --- coarse-trainer routing (one rule for every IVF builder) ---------------
 
 
-def test_pq_topk_batch_bit_equals_per_query_runs(emb, spark):
-    from tmframe_spark.vec.pq import pq_topk_batch
+def test_ivfpq_past_driver_cap_build_serves_like_default(spark, tmp_path, monkeypatch):
+    # past IVF_DRIVER_CELL_CAP the build trains with ivf_train_distributed
+    # and assigns with the broadcast matrix; the literal trainer raises at
+    # this cap (test_ivf_train_cap_raises), so a finished build proves the
+    # route was taken. The two routes are pinned bit-identical, so the
+    # served rows must match.
+    from tmframe_spark.vec import similarity as sim
+    from tmframe_spark.vec.pq import ivfpq_build_index, ivfpq_topk_from_index
 
-    books = pq_train(emb, m=8, ksub=16, iters=2)
-    codes = pq_encode(emb, books).localCheckpoint(eager=True)
-    qids = [0, 7, 42, 100, 250]
-    queries = emb.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = pq_topk_batch(codes, books, queries, k=10).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["vec_id"], r["cosine"]))
-    for qid in qids:
-        qv = emb.where(f"vec_id = {qid}").collect()[0]["embedding"]
-        single = _rows(pq_topk(codes, books, qv, k=10, exclude_id=qid))
-        assert by_q[qid] == single, qid  # ids AND bit-identical cosines
-
-
-def test_pq_topk_batch_partitioning_invariant_and_caps(emb, spark):
-    from tmframe_spark.vec import pq as pqmod
-    from tmframe_spark.vec.pq import pq_topk_batch
-
-    books = pq_train(emb, m=4, ksub=8, iters=1)
-    queries = emb.where("vec_id < 3").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = sorted(map(tuple, pq_topk_batch(
-        pq_encode(emb.repartition(2), books), books, queries, k=5).collect()))
-    b = sorted(map(tuple, pq_topk_batch(
-        pq_encode(emb.repartition(13), books), books, queries, k=5).collect()))
-    assert a == b and len(a) == 15
-    # the lut cap is loud
-    import pytest as _pytest
-
-    orig = pqmod.PQ_BATCH_QUERY_CAP
-    try:
-        pqmod.PQ_BATCH_QUERY_CAP = 10
-        with _pytest.raises(ValueError, match="lut entries"):
-            pq_topk_batch(pq_encode(emb, books), books, queries, k=5)
-    finally:
-        pqmod.PQ_BATCH_QUERY_CAP = orig
-    # empty query set -> empty result
-    assert pq_topk_batch(
-        pq_encode(emb, books), books, queries.where("query_id < 0"), k=5
-    ).count() == 0
+    rng = np.random.default_rng(17)
+    rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(300)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    qv = rows[0][1]
+    geo = dict(nlist=4, m=4, ksub=8, iters=2)
+    a, b = str(tmp_path / "default"), str(tmp_path / "past_cap")
+    ca, ba = ivfpq_build_index(df, a, **geo)
+    monkeypatch.setattr(sim, "IVF_DRIVER_CELL_CAP", 8)
+    monkeypatch.setattr(sim, "_IVF_LITERAL_ASSIGN_CAP", 8)
+    cb, bb = ivfpq_build_index(df, b, **geo)
+    assert [[float(x) for x in c] for c in ca] == [[float(x) for x in c] for c in cb]
+    assert ba == bb
+    ra = _rows(ivfpq_topk_from_index(spark, a, qv, k=10, nprobe=2, exclude_id=0))
+    rb = _rows(ivfpq_topk_from_index(spark, b, qv, k=10, nprobe=2, exclude_id=0))
+    assert ra == rb and len(ra) == 10

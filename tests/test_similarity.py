@@ -205,30 +205,16 @@ def test_ivf_mstep_cell_size_safe_on_degenerate_assignment(spark):
     assert out[0]["centroid"] == ref
 
 
-def test_ivf_assign_broadcast_matches_literal_and_index_serves(emb, tmp_path):
-    # broadcast-matrix assignment == literal-expression assignment, and a
-    # distributed-built index answers exactly like the literal-built one
-    from tmframe_spark.vec.similarity import (
-        ivf_assign_broadcast,
-        ivf_build_index,
-        ivf_topk_from_index,
-    )
+def test_ivf_assign_broadcast_matches_literal_and_index_serves(emb):
+    # broadcast-matrix assignment == literal-expression assignment; that an
+    # index built on the broadcast route serves like the literal-built one
+    # is tests/test_pq.py::test_ivfpq_past_driver_cap_build_serves_like_default
+    from tmframe_spark.vec.similarity import ivf_assign_broadcast
 
-    spark = emb.sparkSession
     cents = ivf_train(emb, nlist=8, iters=2)
     lit = {(r["vec_id"], r["cell"]) for r in ivf_assign(emb, cents).collect()}
     bro = {(r["vec_id"], r["cell"]) for r in ivf_assign_broadcast(emb, cents).collect()}
     assert lit == bro
-    p1, p2 = str(tmp_path / "lit_idx"), str(tmp_path / "dist_idx")
-    c1 = ivf_build_index(emb, p1, nlist=8, iters=3)
-    c2 = ivf_build_index(emb, p2, nlist=8, iters=3, distributed=True)
-    assert c1 == c2
-    qv = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
-    s1 = ivf_topk_from_index(spark, p1, c1, qv, k=10, nprobe=4, exclude_id=0).collect()
-    s2 = ivf_topk_from_index(spark, p2, c2, qv, k=10, nprobe=4, exclude_id=0).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in s1] == [
-        (r["vec_id"], r["cosine"]) for r in s2
-    ]
 
 
 def test_ivf_distributed_resume_from_committed_iterations(spark, tmp_path):
@@ -260,58 +246,6 @@ def test_ivf_train_cap_raises(emb, monkeypatch):
     monkeypatch.setattr(sim, "IVF_DRIVER_CELL_CAP", 8)
     with pytest.raises(ValueError, match="nlist\\*dim"):
         sim.ivf_train(emb, nlist=4, iters=1)
-
-
-def test_ivf_written_index_serves_pruned_and_bit_equal(emb, tmp_path):
-    # the persisted cell-partitioned index must (a) answer bit-identically
-    # to the inline operator and (b) scan only the probed cells — partition
-    # pruning visible in the physical plan
-    from tmframe_spark.vec.similarity import ivf_build_index, ivf_topk_from_index
-
-    spark = emb.sparkSession
-    path = str(tmp_path / "ivf_idx")
-    cents = ivf_build_index(emb, path, nlist=8, iters=3)
-    qv = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
-    served = ivf_topk_from_index(
-        spark, path, cents, qv, k=10, nprobe=4, exclude_id=0
-    )
-    inline = ivf_ann_topk(emb, 0, k=10, nlist=8, nprobe=4)
-    assert [(r["vec_id"], r["cosine"]) for r in served.collect()] == [
-        (r["vec_id"], r["cosine"]) for r in inline.collect()
-    ]
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    seg = plan.split("PartitionFilters", 1)[1][:300]
-    assert "cell" in seg, seg
-
-
-def test_lsh_written_index_serves_pruned_and_bit_equal(emb, tmp_path):
-    # the persisted bucket-partitioned LSH index must answer bit-identically
-    # to the inline operator (probe widths 1 AND exhaustive) and scan only
-    # the probed buckets — partition pruning visible in the physical plan
-    from tmframe_spark.vec.similarity import lsh_build_index, lsh_topk_from_index
-
-    spark = emb.sparkSession
-    path = str(tmp_path / "lsh_idx")
-    lsh_build_index(emb, path, n_planes=8)
-    qv = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
-    for ph in (1, 8):
-        served = lsh_topk_from_index(
-            spark, path, qv, k=10, n_planes=8, probe_hamming=ph, exclude_id=0
-        )
-        inline = lsh_ann_topk(emb, 0, k=10, n_planes=8, probe_hamming=ph)
-        assert [(r["vec_id"], r["cosine"]) for r in served.collect()] == [
-            (r["vec_id"], r["cosine"]) for r in inline.collect()
-        ], f"probe_hamming={ph}"
-    # exhaustive probe through the index equals the exact scan
-    exact = set(_ids(cosine_topk(emb, query_id=0, k=10)))
-    full = set(_ids(lsh_topk_from_index(spark, path, qv, k=10, probe_hamming=8, exclude_id=0)))
-    assert full == exact
-    served = lsh_topk_from_index(spark, path, qv, k=10, probe_hamming=1, exclude_id=0)
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    seg = plan.split("PartitionFilters", 1)[1][:300]
-    assert "bucket" in seg, seg
 
 
 def test_embedding_near_dup_exact_refuses_corpus_scale(emb):

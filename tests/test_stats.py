@@ -256,6 +256,39 @@ def test_ewma_partitioning_and_batch_carry(spark):
         assert got == ref
 
 
+def test_ewma_value_domain_fails_closed_on_both_routes(spark):
+    # declared domain |value| < 2^(62-k): the scalar route (one dominant
+    # group) and the transposed route (>= 64 groups) must agree at the
+    # edge and both raise the same ValueError just past it — never a
+    # silent int64 wrap on one route only
+    import pytest as _pytest
+
+    from tmframe_spark.ops.stats import ewma
+
+    k = 3
+    edge = (1 << (62 - k)) - 1
+
+    def run(c0_vals, n_other):
+        rows = [("c0", T0 + datetime.timedelta(hours=i), v)
+                for i, v in enumerate(c0_vals)]
+        rows += [(f"o{j:03d}", T0 + datetime.timedelta(hours=i), 1)
+                 for j in range(n_other) for i in range(len(c0_vals))]
+        df = spark.createDataFrame(
+            rows, "conv_id string, bucket timestamp, token_volume long"
+        )
+        out = ewma(df, "token_volume", k=k).where("conv_id = 'c0'")
+        return [r["ewma_q"] for r in out.orderBy("bucket").collect()]
+
+    series = [edge, -edge, edge, 0, edge, edge, -edge]
+    scalar = run(series, 0)      # one group: the scalar route
+    transposed = run(series, 70)  # 71 groups: the transposed route
+    assert scalar == transposed == _ref_ewma(series, k)
+    for bad in (edge + 1, -(edge + 1)):
+        for n_other in (0, 70):
+            with _pytest.raises(Exception, match=f"must be < 2\\^{62 - k}"):
+                run(series[:3] + [bad], n_other)
+
+
 def test_ewma_k_validation(spark):
     from tmframe_spark.ops.stats import ewma
 

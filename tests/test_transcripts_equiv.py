@@ -30,3 +30,24 @@ def test_load_transcripts_matches_portable_sql(spark):
     # schema (names + types) must match too — oracles hash by column name
     sql_schema = spark.sql(TRANSCRIPTS_FROM_EVENTS_SQL.format(events="events")).schema
     assert load_transcripts(spark, SF_DIR).schema == sql_schema
+
+
+def test_register_tables_memo_sees_rewritten_table(spark, tmp_path):
+    # the per-session memo must not serve a stale view after a table file
+    # is rewritten in place: it keys on each file's (mtime_ns, size)
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR as SMALL_SF
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for f in os.listdir(SMALL_SF):
+        shutil.copyfile(os.path.join(SMALL_SF, f), sf / f)
+    register_tables(spark, str(sf))
+    assert spark.table("nation").count() > 1
+    nation = sf / "nation.parquet"
+    pq.write_table(pq.read_table(nation).slice(0, 1), nation)
+    register_tables(spark, str(sf))
+    assert spark.table("nation").count() == 1

@@ -17,7 +17,7 @@ All UDFs are Arrow-batched (applyInPandas / mapInPandas); no per-row Python.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -44,6 +44,43 @@ from tmframe_spark.codec.frames import (
     marshal_frames,
     unmarshal_frames,
 )
+
+
+def _closed_groups(
+    batches: Iterator[pd.DataFrame],
+    group_starts: Callable[[pd.DataFrame], np.ndarray],
+) -> Iterator[tuple[pd.DataFrame, np.ndarray, np.ndarray]]:
+    """Re-cut a stream of Arrow batches, sorted by group key, at group
+    boundaries: yields ``(pdf, starts, ends)`` row ranges of whole groups
+    only (``pdf`` may hold a still-open group's rows past ``ends[-1]``);
+    the last group is yielded on its own at end of stream.
+
+    The open group is held back as a list of pieces and concatenated ONCE,
+    by the batch that closes it, so a group spanning N batches costs
+    O(rows) — re-concatenating the carry on every batch cost O(rows x N),
+    quadratic for a decade-long dense conversation. ``group_starts(pdf)``
+    returns the first-row offset of every group in ``pdf`` (0 included)."""
+    pending: list[pd.DataFrame] = []
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        if pending:
+            # key-sorted rows: a batch whose first and last rows both
+            # continue the open group closes nothing
+            edge = pd.concat(
+                [pending[-1].iloc[-1:], pdf.iloc[[0, -1]]], ignore_index=True
+            )
+            if len(group_starts(edge)) == 1:
+                pending.append(pdf)
+                continue
+            pdf = pd.concat([*pending, pdf], ignore_index=True)
+        starts = group_starts(pdf)
+        pending = [pdf.iloc[starts[-1] :].reset_index(drop=True)]
+        if len(starts) > 1:
+            yield pdf, starts[:-1], starts[1:]
+    if pending:
+        tail = pending[0] if len(pending) == 1 else pd.concat(pending, ignore_index=True)
+        yield tail, np.array([0]), np.array([len(tail)])
 
 
 def _key_fields(df: DataFrame, keys: list[str]) -> list[StructField]:
@@ -126,32 +163,22 @@ def pack_blocks(
         )
         return pd.DataFrame(out)
 
+    def key_starts(pdf: pd.DataFrame) -> np.ndarray:
+        kdf = pdf[list(keys)]
+        # null-safe: NaN != NaN in pandas, so a plain ne() would split a
+        # null-keyed group into one block per point
+        prev = kdf.shift()
+        change = (
+            (~((kdf == prev) | (kdf.isna() & prev.isna()))).any(axis=1).to_numpy()
+        )
+        change[0] = True
+        return np.flatnonzero(change)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # streaming group packer: rows arrive sorted by (keys..., ts, seq)
         # within the partition; groups spanning Arrow batches are buffered.
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            kdf = pdf[list(keys)]
-            # null-safe: NaN != NaN in pandas, so a plain ne() would split a
-            # null-keyed group into one block per point
-            prev = kdf.shift()
-            change = (
-                (~((kdf == prev) | (kdf.isna() & prev.isna()))).any(axis=1).to_numpy()
-            )
-            change[0] = True
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(pdf))
-            # last group may continue in the next batch — hold it back
-            carry = pdf.iloc[starts[-1] :].reset_index(drop=True)
-            if len(starts) > 1:
-                yield emit(pdf, starts[:-1], ends[:-1])
-        if carry is not None and len(carry):
-            yield emit(carry, np.array([0]), np.array([len(carry)]))
+        for pdf, starts, ends in _closed_groups(batches, key_starts):
+            yield emit(pdf, starts, ends)
 
     # explicit partition count: AQE would coalesce this exchange by BYTE
     # size, but the downstream cost is Python work per GROUP — a handful of
@@ -211,9 +238,9 @@ def pack_rollup_blocks(
     the conv's global [first, last] span), so the hot conversation is the
     stage's potential straggler — but its cost is CALENDAR-bounded, not
     data-bounded: a fully dense conv-year at 1m is 525k spine points,
-    ~0.35 s at the measured dense-encode rate, so even a decade-long
-    always-active conversation costs ~3.5 s serial (coarser tiers
-    proportionally less).
+    ≈1.2 s of dense encode + marshal on one core (3,650 dense day blocks
+    measured at 11.8 s), so a decade-long always-active conversation
+    costs ~12 s serial in one task (coarser tiers proportionally less).
 
     ``split_dense_rows`` enables the finer (conv, calendar-chunk) pack for
     deployments where that straggler matters: conversations holding MORE
@@ -229,7 +256,9 @@ def pack_rollup_blocks(
     still produce their all-zero blocks via a per-conv chunk spine
     anti-joined against the chunks that hold data. Cost: one extra
     aggregation pass over the rollup + a second (dense-rows-only) shuffle
-    — pay it when the straggler dominates, not by default.
+    — pay it when the straggler dominates, not by default. Measured at
+    local[4] (4 vCPU), pack stage only, a 10-year dense 1m conversation
+    plus 31 small ones: 14.5 s one-pass vs 11.2 s split, identical bytes.
     """
     # the wire contract is UTC end to end: bucket_ts_ns casts through the
     # SESSION timezone while the block/group arithmetic (numpy datetime64,
@@ -449,47 +478,30 @@ def pack_rollup_blocks(
             out = pd.concat([out, extra], ignore_index=True)
         return out
 
+    def conv_starts(pdf: pd.DataFrame) -> np.ndarray:
+        conv = pdf["conv_id"].to_numpy()
+        change = np.empty(len(conv), dtype=bool)
+        change[0] = True
+        np.not_equal(conv[1:], conv[:-1], out=change[1:])
+        return np.flatnonzero(change)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # carry = the open (possibly batch-spanning) conversation's ROLLUP
-        # rows — data-sized and bounded by calendar (a Y-year conversation
-        # holds at most Y*525k 1m rows, and proportionally fewer at coarser
-        # tiers), never the gap-filled spine, which only exists as numpy
-        # arrays inside pack_conv one block at a time. Guarded by the
-        # decade-long-conversation test in tests/test_pack_fused.py.
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            conv = pdf["conv_id"].to_numpy()
-            change = np.empty(len(conv), dtype=bool)
-            change[0] = True
-            np.not_equal(conv[1:], conv[:-1], out=change[1:])
-            starts = np.flatnonzero(change)
-            carry = pdf.iloc[starts[-1] :].reset_index(drop=True)
-            if len(starts) == 1:
-                continue
-            ts = pdf["_ts"].to_numpy(np.int64)
-            a0 = pdf["_v0"].to_numpy(np.float64)
-            a1 = pdf["_v1"].to_numpy(np.int64)
-            ncl = int(starts[-1])  # closed rows: everything before the carry
+        # the held-back open conversation is its ROLLUP rows — data-sized
+        # and bounded by calendar (a Y-year conversation holds at most
+        # Y*525k 1m rows, and proportionally fewer at coarser tiers), never
+        # the gap-filled spine, which only exists as numpy arrays inside
+        # the encoder one block at a time. Guarded by the decade-long and
+        # many-batch conversation tests in tests/test_pack_fused.py.
+        for pdf, starts, ends in _closed_groups(batches, conv_starts):
+            ncl = int(ends[-1])  # closed rows: the open conv's rows follow
             yield pack_many(
-                conv, ts[:ncl], a0[:ncl], a1[:ncl], starts[:-1], starts[1:]
+                pdf["conv_id"].to_numpy(),
+                pdf["_ts"].to_numpy(np.int64)[:ncl],
+                pdf["_v0"].to_numpy(np.float64)[:ncl],
+                pdf["_v1"].to_numpy(np.int64)[:ncl],
+                starts,
+                ends,
             )
-        if carry is not None and len(carry):
-            out = pd.DataFrame(
-                pack_conv(
-                    carry["conv_id"].iloc[0],
-                    carry["_ts"].to_numpy(np.int64),
-                    carry["_v0"].to_numpy(np.float64),
-                    carry["_v1"].to_numpy(np.int64),
-                ),
-                columns=cols,
-            )
-            out["grp"] = pd.to_datetime(out["grp"])
-            yield out
 
     # explicit partition count — see pack_blocks: the pack cost is Python
     # work per conversation, not bytes; AQE byte-based coalescing must not
@@ -585,10 +597,18 @@ def pack_rollup_blocks(
     )
     dense_pts = pts.join(F.broadcast(dense), "conv_id").withColumn("_chunk", chunk_of)
 
+    def chunk_starts(pdf: pd.DataFrame) -> np.ndarray:
+        conv = pdf["conv_id"].to_numpy()
+        chk = pdf["_chunk"].to_numpy(np.int64)
+        change = np.empty(len(conv), dtype=bool)
+        change[0] = True
+        np.not_equal(conv[1:], conv[:-1], out=change[1:])
+        change[1:] |= chk[1:] != chk[:-1]
+        return np.flatnonzero(change)
+
     def dense_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # same streaming-carry shape as fn, but the group key is
+        # same streaming shape as fn, but the group key is
         # (conv_id, _chunk) and each group emits exactly one block
-        carry: pd.DataFrame | None = None
 
         def emit(pdf, starts, ends):
             conv = pdf["conv_id"].to_numpy()
@@ -609,26 +629,8 @@ def pack_rollup_blocks(
             out["grp"] = pd.to_datetime(out["grp"])
             return out
 
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            conv = pdf["conv_id"].to_numpy()
-            chk = pdf["_chunk"].to_numpy(np.int64)
-            change = np.empty(len(conv), dtype=bool)
-            change[0] = True
-            np.not_equal(conv[1:], conv[:-1], out=change[1:])
-            change[1:] |= chk[1:] != chk[:-1]
-            starts = np.flatnonzero(change)
-            carry = pdf.iloc[starts[-1] :].reset_index(drop=True)
-            if len(starts) == 1:
-                continue
-            ends = np.append(starts[1:], len(pdf))
-            yield emit(pdf, starts[:-1], ends[:-1])
-        if carry is not None and len(carry):
-            yield emit(carry, np.array([0]), np.array([len(carry)]))
+        for pdf, starts, ends in _closed_groups(batches, chunk_starts):
+            yield emit(pdf, starts, ends)
 
     dense_blocks = (
         dense_pts.repartition(n_part, "conv_id", "_chunk")

@@ -58,22 +58,25 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
     and unix_micros conversions must match the (timezone-naive) DuckDB
     oracles even when the caller's SparkSession was built elsewhere.
 
-    Re-registering the SAME directory on the SAME session is a no-op:
-    each ``spark.read.parquet`` costs a driver-side listing + footer
+    Re-registering the SAME, unchanged directory on the SAME session is a
+    no-op: each ``spark.read.parquet`` costs a driver-side listing + footer
     schema read (~0.1 s/table measured), so a registry sweep that calls
     this per query would pay ~1 s of pure metadata overhead per call.
-    The memo holds only the last-registered directory (a Python attribute
-    on this session wrapper) — switching sf_dirs re-registers, and every
-    query action still reads the parquet data itself from disk."""
+    The memo holds only the last registration (a Python attribute on this
+    session wrapper), keyed on the absolute directory plus every table
+    file's ``(st_mtime_ns, st_size)`` — one ``stat`` per table — so
+    switching sf_dirs or rewriting a table in place re-registers, and
+    every query action still reads the parquet data itself from disk."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     import os
 
-    sf = os.path.abspath(sf_dir)
-    if getattr(spark, "_tmframe_registered_sf", None) == sf:
+    stats = [os.stat(f"{sf_dir}/{t}.parquet") for t in TABLES]
+    key = (os.path.abspath(sf_dir), [(st.st_mtime_ns, st.st_size) for st in stats])
+    if getattr(spark, "_tmframe_registered", None) == key:
         return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    spark._tmframe_registered_sf = sf
+    spark._tmframe_registered = key
 
 
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

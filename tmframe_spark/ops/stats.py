@@ -230,6 +230,13 @@ def ewma(
     original scalar loop runs instead — it doubles as the semantics twin.
     The recurrence itself is unchanged and exact: arithmetic >> on int64
     is the same floor shift in numpy and Python.
+
+    Declared value domain: ``|value| < 2^(62-k)``, so ``v << k`` and every
+    state difference fit int64. Each Arrow batch is checked BEFORE the
+    route is chosen and an out-of-domain value raises the same ValueError
+    on both routes — the numpy shift would otherwise wrap silently while
+    the scalar twin's Python ints only failed later, making the outcome
+    depend on batch composition.
     """
     import numpy as _np
     import pandas as _pd
@@ -238,6 +245,7 @@ def ewma(
     if k < 1 or k > 30:
         raise ValueError(f"ewma k must be in [1, 30], got {k}")
     shift = k
+    lim = 1 << (62 - shift)
 
     src = rolled.select(
         "conv_id", "bucket", F.col(value_col).cast("long").alias("value")
@@ -251,6 +259,12 @@ def ewma(
             if not n:
                 continue
             vals = pdf["value"].to_numpy()
+            if (vals >= lim).any() or (vals <= -lim).any():
+                raise ValueError(
+                    f"ewma: |{value_col}| must be < 2^{62 - shift} at k={shift} "
+                    f"(the Q_k state is int64); got "
+                    f"{vals[(vals >= lim) | (vals <= -lim)][0]}"
+                )
             convs = pdf["conv_id"].to_numpy()
             change = _np.empty(n, dtype=bool)
             change[0] = True

@@ -623,6 +623,11 @@ def q_tfgroup_minute_counts(spark, sf_dir):
         F.count(F.lit(1)).alias("n")
     )
     bounds = m.agg(F.min("minute").alias("mn"), F.max("minute").alias("mx"))
+    # repartition("day") below is a deliberate exception to the round-2
+    # rule "AQE serializes heavy-CPU/tiny-byte stages" (CLAUDE.md): AQE may
+    # coalesce this by-column exchange to one task, which stays cheap only
+    # while each row's minute sequence() is <= 1440 elements of JVM
+    # Generate work. Re-measure before flipping it to repartition(n).
     days = bounds.select(
         "mn",
         "mx",

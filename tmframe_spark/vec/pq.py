@@ -28,8 +28,6 @@ tmframe_spark/queries.py top):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,8 +37,8 @@ from tmframe_spark.vec.similarity import _Q
 #: values (the PQ codebook itself is tiny — m x ksub x dsub — but Lloyd
 #: iterations run on the collected SAMPLE; 2^24 elements = 128 MiB).
 #: Sample-based codebook training is the standard PQ practice (the TPAMI
-#: paper trains on a subset); past this cap, train each subspace with
-#: ivf_train_distributed over sliced columns instead of raising the cap.
+#: paper trains on a subset), and it is the only PQ trainer: every index
+#: build trains its codebooks on this bounded sample.
 PQ_TRAIN_ELEMENT_CAP = 1 << 24
 
 
@@ -83,8 +81,8 @@ def pq_train(
         raise ValueError(
             f"pq_train would collect sample_cap*dim = {sample_cap * dim} "
             f"float64 values (cap {PQ_TRAIN_ELEMENT_CAP}); lower sample_cap "
-            f"or use pq_train_distributed (full-corpus Lloyd, bounded task "
-            f"memory, no driver collect of vectors)"
+            f"— codebooks train on a bounded lowest-id sample at any corpus "
+            f"size"
         )
     sample = embeddings.orderBy(id_col).limit(sample_cap).select(vec_col).collect()
     X = np.array([[float(v) for v in r[vec_col]] for r in sample], dtype=np.float64)
@@ -111,128 +109,6 @@ def pq_train(
                     C[c] = (qsum / len(pts)) / _Q
         books.append([[float(x) for x in row] for row in C])
     return books
-
-
-def pq_train_distributed(
-    embeddings: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stats_out: list | None = None,
-) -> list[list[list[float]]]:
-    """Train PQ codebooks on the FULL corpus with bounded task memory — the
-    scale successor to ``pq_train``'s driver-sample form (round-5 verdict
-    next #2): per-subspace distributed Lloyd reusing ``ivf_mstep``'s
-    partial-sum pattern with cell = (subspace, code).
-
-    Per iteration, ONE pass over the table:
-    - E-step (in the same Arrow batch): per subspace, the chunked
-      ELEMENTWISE squared-L2 argmin ``pq_train`` uses (not matmul — the
-      twin's bitwise-deterministic assignment rule, ties to the lowest
-      code);
-    - M-step partials: per (sub, code, pos-within-subspace), fixed-point
-      integer sums of floor(x * 2^20) reduced inside the task
-      (argsort + ``add.reduceat``) then combined by Spark's built-in
-      map-side (sub, code, pos) aggregation — a hot code with billions of
-      rows costs bounded memory at every stage;
-    - the driver collects exactly the codebook-shaped aggregate
-      (≤ m x ksub x dsub = dim x ksub rows — the codebook IS the result, so
-      this is the floor of any trainer) and patches its broadcast copy;
-      empty codes keep their previous centroid (the ``pq_train`` rule).
-
-    Init: the ``ksub`` lowest-id vectors' subvectors (seed-free), identical
-    to ``pq_train``'s first-ksub-of-the-sorted-sample rule — so on a corpus
-    no larger than ``pq_train``'s sample the two trainers are BIT-IDENTICAL
-    (integer sums are order-free; s/n then /2^20 are the same two exact
-    IEEE operations; pinned by tests/test_pq.py). ``stats_out`` receives
-    the per-iteration collected row count (bound test hook).
-    """
-    import numpy as np
-
-    first = embeddings.select(vec_col).limit(1).collect()
-    dim = len(first[0][0]) if first and first[0][0] is not None else 0
-    if dim == 0:
-        raise ValueError("pq_train_distributed needs at least one non-null vector")
-    dsub = _check_geometry(dim, m, ksub)
-    if dim * ksub > PQ_TRAIN_ELEMENT_CAP:
-        raise ValueError(
-            f"codebook itself has dim*ksub = {dim * ksub} elements "
-            f"(cap {PQ_TRAIN_ELEMENT_CAP}) — it must broadcast to encode, "
-            f"so a codebook this large cannot serve anyway; lower ksub or m"
-        )
-    init = embeddings.orderBy(id_col).limit(ksub).select(vec_col).collect()
-    X0 = np.array([[float(v) for v in r[vec_col]] for r in init], dtype=np.float64)
-    books = np.empty((m, ksub, dsub), dtype=np.float64)
-    for s in range(m):
-        C = X0[: min(ksub, len(X0)), s * dsub : (s + 1) * dsub].copy()
-        if len(C) < ksub:  # degenerate tiny corpus: pad with repeats
-            C = np.vstack([C] * ((ksub + len(C) - 1) // len(C)))[:ksub]
-        books[s] = C
-    spark = embeddings.sparkSession
-
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(books)
-
-        def partials(batches):
-            import numpy as _np
-            import pandas as _pd
-
-            B = bc.value
-            m_, ksub_, dsub_ = B.shape
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = _np.stack(pdf[vec_col].to_numpy()).astype(_np.float64)
-                frames = []
-                for s in range(m_):
-                    Xs = X[:, s * dsub_ : (s + 1) * dsub_]
-                    C = B[s]
-                    # the pq_train assignment verbatim: chunked elementwise
-                    # distances, argmin ties to the lowest code
-                    assign = _np.empty(len(Xs), dtype=_np.int64)
-                    for i in range(0, len(Xs), 1024):
-                        blk = Xs[i : i + 1024]
-                        d2 = ((blk[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                        assign[i : i + 1024] = _np.argmin(d2, axis=1)
-                    Qm = _np.floor(Xs * (1 << 20)).astype(_np.int64)
-                    order = _np.argsort(assign, kind="stable")
-                    cs = assign[order]
-                    uniq, firsts = _np.unique(cs, return_index=True)
-                    sums = _np.add.reduceat(Qm[order], firsts, axis=0)
-                    counts = _np.diff(_np.append(firsts, len(cs)))
-                    frames.append(
-                        _pd.DataFrame(
-                            {
-                                "sub": _np.full(len(uniq) * dsub_, s, dtype="int32"),
-                                "code": _np.repeat(uniq, dsub_).astype("int32"),
-                                "pos": _np.tile(
-                                    _np.arange(dsub_, dtype="int32"), len(uniq)
-                                ),
-                                "s": sums.ravel(),
-                                "n": _np.repeat(counts, dsub_).astype("int64"),
-                            }
-                        )
-                    )
-                yield _pd.concat(frames, ignore_index=True)
-
-        agg = (
-            embeddings.select(vec_col)
-            .mapInPandas(partials, "sub int, code int, pos int, s long, n long")
-            .groupBy("sub", "code", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        if stats_out is not None:
-            stats_out.append(len(agg))
-        for r in agg:
-            # (s / n) / 2^20: same two exact IEEE ops as pq_train's
-            # (qsum / len(pts)) / _Q — division by 2^20 only scales the
-            # exponent, so equal s, n give bit-equal centroids
-            books[r["sub"], r["code"], r["pos"]] = (r["s"] / r["n"]) / _Q
-        bc.unpersist()
-    return [[[float(x) for x in row] for row in books[s]] for s in range(m)]
 
 
 def _codebook_matrix(codebooks):
@@ -345,9 +221,12 @@ def pq_topk(
     quality is bounded by quantization distortion (recall pinned by tests);
     determinism is not: scores are exact integers, ties broken by id.
 
-    The external query vector is float32-rounded first, matching what the
-    same vector would score as a STORED embedding (the
-    lsh/ivf_topk_from_index rule)."""
+    The external query vector is float32-rounded first: stored embeddings
+    are float32, so quantizing an unrounded float64 query would give a
+    different fixed-point vector than the same embedding held by the
+    index, and near-tie pairs would flip in or out of the top-k. Every
+    served path (this one, ``pq_topk_rerank``, ``_pq_topk_residual``,
+    ``ivfpq_topk_from_index``) applies the same rounding."""
     import numpy as np
 
     spark = codes.sparkSession
@@ -387,124 +266,6 @@ def pq_topk(
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
-    )
-
-
-#: cap on the batched-query driver state: Q x m x ksub int64 entries for
-#: each of the two lookup tables (2^22 entries = 64 MiB of luts) — past it,
-#: split the query set; the per-task emission is tasks x Q x k rows, so a
-#: bounded Q also bounds the shuffle.
-PQ_BATCH_QUERY_CAP = 1 << 22
-
-
-def pq_topk_batch(
-    codes: DataFrame,
-    codebooks,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """MANY queries against the code table in ONE scan — the serving shape
-    for query-heavy workloads (similarity sweeps, dedup candidate probes):
-    the per-query ADC tables stack into one broadcast, each Arrow batch of
-    codes is gathered for ALL queries at once (numpy fancy-indexing), and
-    each task emits only its LOCAL top-k per query — tasks x Q x k rows
-    into one final per-query top-k window, instead of Q full scans.
-
-    Scores are the identical exact int64 gathers as ``pq_topk``, and the
-    cosine is the same two IEEE ops (sqrt is correctly rounded in both
-    numpy and the JVM), so each query's result is BIT-identical to its
-    single-query ``pq_topk`` run (pinned by tests). ``exclude_self`` drops
-    ``vec_id == query_id`` (corpus self-queries). Returns
-    (query_id, vec_id, cosine), k rows per query.
-
-    Queries are collected driver-side (Q x dim — the luts are the real
-    footprint, capped by PQ_BATCH_QUERY_CAP with a loud error)."""
-    import numpy as np
-    from pyspark.sql.window import Window
-
-    qrows = queries.select(query_id_col, vec_col).collect()
-    if not qrows:
-        return codes.sparkSession.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cosine double"
-        )
-    B = _codebook_matrix(codebooks)
-    m, ksub, dsub = B.shape
-    nq = len(qrows)
-    if nq * m * ksub > PQ_BATCH_QUERY_CAP:
-        raise ValueError(
-            f"pq_topk_batch: {nq} queries x m={m} x ksub={ksub} = "
-            f"{nq * m * ksub} lut entries (cap {PQ_BATCH_QUERY_CAP}); "
-            f"split the query set"
-        )
-    qids = np.array([int(r[query_id_col]) for r in qrows], dtype=np.int64)
-    dls = np.empty((nq, m, ksub), dtype=np.int64)
-    nls = np.empty((nq, m, ksub), dtype=np.int64)
-    qn2s = np.empty(nq, dtype=np.int64)
-    for i, r in enumerate(qrows):
-        qv = np.asarray(r[vec_col], dtype=np.float32).astype(np.float64)
-        dls[i], nls[i], qn2s[i] = _adc_tables(codebooks, qv)
-    spark = codes.sparkSession
-    bc = spark.sparkContext.broadcast((qids, dls, nls, qn2s))
-
-    def score(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        qi, dl, nl, qn = bc.value
-        nq_, m_, _ = dl.shape
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = _np.frombuffer(b"".join(pdf["code"]), dtype=_np.uint8).reshape(-1, m_)
-            ids = pdf[id_col].to_numpy()
-            dot = _np.zeros((nq_, len(C)), dtype=_np.int64)
-            xn2 = _np.zeros(len(C), dtype=_np.int64)
-            for s in range(m_):
-                cs = C[:, s]
-                dot += dl[:, s, cs]
-                xn2 += nl[0, s, cs]  # reconstruction norm is query-free
-            # cosine: the same two IEEE ops as pq_topk, per (query, row)
-            cos = dot / _np.sqrt(qn[:, None].astype(_np.float64) * xn2[None, :])
-            out_q, out_id, out_c = [], [], []
-            for i in range(nq_):
-                c = cos[i]
-                idv = ids
-                if exclude_self:
-                    mask = idv != qi[i]
-                    c, idv = c[mask], idv[mask]
-                take = min(k, len(idv))
-                if not take:
-                    continue
-                # local top-k by (cosine desc, id asc): lexsort is stable
-                order = _np.lexsort((idv, -c))[:take]
-                out_q.append(_np.full(take, qi[i], dtype=_np.int64))
-                out_id.append(idv[order])
-                out_c.append(c[order])
-            if out_q:
-                yield _pd.DataFrame(
-                    {
-                        "_qid": _np.concatenate(out_q),
-                        "_id": _np.concatenate(out_id),
-                        "_cos": _np.concatenate(out_c),
-                    }
-                )
-
-    local = codes.select(id_col, "code").mapInPandas(
-        score, "_qid long, _id long, _cos double"
-    )
-    w = Window.partitionBy("_qid").orderBy(F.col("_cos").desc(), F.col("_id"))
-    return (
-        local.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col("_id").alias(id_col),
-            F.col("_cos").alias("cosine"),
-        )
     )
 
 
@@ -566,47 +327,6 @@ def pq_topk_rerank(
     )
 
 
-def pq_build_index(
-    embeddings: DataFrame,
-    path: str,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    full_corpus: bool = False,
-) -> list[list[list[float]]]:
-    """Build the PERSISTED PQ index: train codebooks, encode every vector,
-    write the m-byte code table to ``path`` (plain parquet — the whole
-    point is that the full scan is now tiny; pair with an IVF cell
-    partitioning when pruning is also wanted). Returns the codebooks —
-    store them beside the index; they are the only state a query needs.
-
-    ``full_corpus=True`` trains with ``pq_train_distributed`` (every vector
-    participates, bounded task memory) instead of the driver-sample twin —
-    the right choice at corpus scale."""
-    train = pq_train_distributed if full_corpus else pq_train
-    books = train(embeddings, m, ksub, iters, id_col, vec_col)
-    pq_encode(embeddings, books, id_col, vec_col).write.mode("overwrite").parquet(path)
-    return books
-
-
-def pq_topk_from_index(
-    spark,
-    path: str,
-    codebooks,
-    query_vec,
-    k: int = 10,
-    exclude_id: int | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Serve PQ top-k from the written code table — bit-identical scoring
-    to the inline ``pq_topk`` over the same codes (asserted by tests)."""
-    return pq_topk(
-        spark.read.parquet(path), codebooks, query_vec, k, exclude_id, id_col
-    )
-
-
 def ivfpq_build_index(
     embeddings: DataFrame,
     path: str,
@@ -616,7 +336,6 @@ def ivfpq_build_index(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    full_corpus: bool = False,
     store_vectors: bool = False,
     residual: bool = False,
 ):
@@ -628,7 +347,7 @@ def ivfpq_build_index(
     - ``path/codes``: (id, code) PARTITIONED BY (cell) — a query reads
       nprobe/nlist of the DIRECTORIES (PartitionFilters), and each row it
       does read costs m bytes + two table-gathers instead of the vector;
-    - ``path/centroids`` / ``path/codebooks`` / ``path/flags``: the tiny
+    - ``path/centroids`` / ``path/codebooks`` / ``path/meta.json``: the tiny
       quantizer state, persisted so serving needs only the path
       (``ivfpq_load_meta``);
     - ``store_vectors=True`` additionally writes ``path/vectors``
@@ -643,23 +362,17 @@ def ivfpq_build_index(
     ``_pq_topk_residual``). Measured recall gain on the bench corpus in
     BENCH.md round-6.
 
-    ``full_corpus=True`` trains BOTH quantizers distributed
-    (ivf_train_distributed + pq_train_distributed — no driver-bounded
-    stage anywhere). Returns (centroids, codebooks)."""
-    from tmframe_spark.vec.similarity import (
-        ivf_assign,
-        ivf_assign_broadcast,
-        ivf_train,
-        ivf_train_distributed,
-    )
+    The coarse quantizer trains and assigns through
+    ``vec/similarity._ivf_quantize`` (the distributed trainer past
+    ``IVF_DRIVER_CELL_CAP``, the same rule ``semantic_pairs`` uses); the
+    PQ codebooks train on ``pq_train``'s bounded sample. Returns
+    (centroids, codebooks)."""
+    from tmframe_spark.vec.similarity import _ivf_quantize
 
     spark = embeddings.sparkSession
-    if full_corpus:
-        cents = ivf_train_distributed(embeddings, nlist, iters, id_col, vec_col)
-        assigned = ivf_assign_broadcast(embeddings, cents, vec_col)
-    else:
-        cents = ivf_train(embeddings, nlist, iters, id_col, vec_col)
-        assigned = ivf_assign(embeddings, cents, vec_col)
+    first = embeddings.select(vec_col).limit(1).collect()
+    dim = len(first[0][0]) if first and first[0][0] is not None else 0
+    cents, assigned = _ivf_quantize(embeddings, dim, nlist, iters, id_col, vec_col)
     assigned = assigned.localCheckpoint(eager=True)  # feeds 1-2 writes + train
     if residual:
         # residual = vec − centroid[cell]: a broadcast join against the
@@ -675,12 +388,10 @@ def ivfpq_build_index(
                 F.col(vec_col), F.col("_cent"), lambda x, c: x.cast("double") - c
             ).alias("_res"),
         ).localCheckpoint(eager=True)  # feeds train AND encode
-        train = pq_train_distributed if full_corpus else pq_train
-        books = train(enc_src, m, ksub, iters, id_col, "_res")
+        books = pq_train(enc_src, m, ksub, iters, id_col, "_res")
         codes = pq_encode(enc_src, books, id_col, "_res", carry_cols=("cell",))
     else:
-        train = pq_train_distributed if full_corpus else pq_train
-        books = train(embeddings, m, ksub, iters, id_col, vec_col)
+        books = pq_train(embeddings, m, ksub, iters, id_col, vec_col)
         codes = pq_encode(assigned, books, id_col, vec_col, carry_cols=("cell",))
     # batch/cell layout: batch=<token> is the append unit (the dedup-index
     # crash-atomicity pattern — meta.json commits the token list LAST, so a
@@ -759,12 +470,6 @@ def ivfpq_read_meta(path: str) -> dict:
         return json.load(f)
 
 
-def ivfpq_load_flags(spark, path: str) -> dict:
-    """Back-compat alias: the index's build metadata (residual, geometry,
-    committed batches)."""
-    return ivfpq_read_meta(path)
-
-
 def ivfpq_vacuum(path: str) -> list[str]:
     """Delete UNCOMMITTED batch directories (a crashed append's leftovers)
     from the codes and vectors tables; returns the removed tokens. Safe
@@ -811,7 +516,7 @@ def ivfpq_append(
     import shutil
     import uuid
 
-    from tmframe_spark.vec.similarity import ivf_assign
+    from tmframe_spark.vec.similarity import _ivf_quantize
 
     meta = ivfpq_read_meta(path)
     if batch is not None and batch in meta.get("batches", []):
@@ -823,7 +528,11 @@ def ivfpq_append(
             shutil.rmtree(d)  # a crashed attempt's partial write
     cents, books = ivfpq_load_meta(embeddings.sparkSession, path)
     spark = embeddings.sparkSession
-    assigned = ivf_assign(embeddings, cents, vec_col).localCheckpoint(eager=True)
+    # frozen quantizer: only the assignment route applies (no training)
+    _, assigned = _ivf_quantize(
+        embeddings, len(cents[0]), len(cents), 0, id_col, vec_col, centroids=cents
+    )
+    assigned = assigned.localCheckpoint(eager=True)
     if meta.get("residual", False):
         cdf = spark.createDataFrame(
             [(c, [float(x) for x in v]) for c, v in enumerate(cents)],
@@ -973,7 +682,7 @@ def ivfpq_topk_from_index(
     contract composed with cell pruning.
 
     A residual-built index (ivfpq_build_index(residual=True)) is detected
-    from the persisted flags and scored by ``_pq_topk_residual``'s
+    from the persisted meta.json and scored by ``_pq_topk_residual``'s
     per-cell reconstruction tables; everything else (probing, pruning,
     refine) is identical."""
     import numpy as np
@@ -1016,36 +725,3 @@ def ivfpq_topk_from_index(
     )
 
 
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    nlist: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF + PQ composed, the classic two-level ANN serving shape: the IVF
-    coarse quantizer prunes WHICH vectors are scanned (nprobe/nlist of the
-    corpus; a written index turns that into directory pruning), PQ shrinks
-    WHAT each scanned row costs (m bytes + two table-gathers). Inline
-    self-contained form: train both quantizers, assign + encode, score the
-    probed cells' codes only."""
-    from tmframe_spark.vec.similarity import ivf_assign, ivf_train
-
-    cents = ivf_train(embeddings, nlist, iters, id_col, vec_col)
-    qv = [
-        float(x)
-        for x in embeddings.where(F.col(id_col) == query_id).collect()[0][vec_col]
-    ]
-    dists = [
-        (sum((a - b) ** 2 for a, b in zip(qv, cent)), c) for c, cent in enumerate(cents)
-    ]
-    probe = [c for _, c in sorted(dists)[:nprobe]]
-    books = pq_train(embeddings, m, ksub, iters, id_col, vec_col)
-    probed = ivf_assign(embeddings, cents, vec_col).where(F.col("cell").isin(*probe))
-    codes = pq_encode(probed, books, id_col, vec_col)
-    return pq_topk(codes, books, qv, k, exclude_id=query_id, id_col=id_col)

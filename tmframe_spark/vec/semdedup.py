@@ -14,7 +14,8 @@ ANN); its cost is the classic O(sum cell_i^2) in-cluster pair space,
 which is why the cell-size cap below is a hard error, not advice.
 
 Scale shape (100 TB posture): train once (driver-capped or distributed
-trainer — the ivf_build_index routing); assignment is one codegen/matmul
+trainer, routed by vec/similarity._ivf_quantize — the same rule the
+persisted IVF+PQ index build uses); assignment is one codegen/matmul
 pass; the pair self-join shuffles keyed by cell and never crosses cells;
 component folding is the alternating-star algorithm (text/dedup.
 dedup_clusters) whose shuffles are edge-sized. Skewed cells are refused
@@ -27,15 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tmframe_spark.vec.similarity import (
-    IVF_DRIVER_CELL_CAP,
-    _qdot,
-    _qnorm2,
-    ivf_assign,
-    ivf_assign_broadcast,
-    ivf_train,
-    ivf_train_distributed,
-)
+from tmframe_spark.vec.similarity import _ivf_quantize, _qdot, _qnorm2
 
 #: refuse the in-cell pairwise join past this many rows in ONE cell — the
 #: O(cell^2) pair space is SemDeDup's designed cost and must stay visible;
@@ -56,25 +49,17 @@ def semantic_pairs(
     """Near-duplicate pairs (id_a < id_b, cosine >= threshold) generated
     within k-means cells only. ``centroids`` reuses an existing quantizer
     (e.g. the one backing an IVF index); otherwise one is trained here with
-    the deterministic fixed-point rule (distributed trainer past the
-    driver cap). Cosines are the repo's exact fixed-point integers — one
-    IEEE division per pair, partitioning-independent."""
+    the deterministic fixed-point rule (``_ivf_quantize``: distributed
+    trainer past the driver cap). Cosines are the repo's exact fixed-point
+    integers — one IEEE division per pair, partitioning-independent."""
     first = embeddings.select(vec_col).limit(1).collect()
     dim = len(first[0][0]) if first and first[0][0] is not None else 0
     if dim == 0:
         return embeddings.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    if centroids is None:
-        if nlist * dim > IVF_DRIVER_CELL_CAP:
-            centroids = ivf_train_distributed(embeddings, nlist, iters, id_col, vec_col)
-        else:
-            centroids = ivf_train(embeddings, nlist, iters, id_col, vec_col)
-    use_broadcast = len(centroids) * dim > 1 << 16  # literal-plan size guard
-    assigned = (
-        ivf_assign_broadcast(embeddings, centroids, vec_col)
-        if use_broadcast
-        else ivf_assign(embeddings, centroids, vec_col)
+    _, assigned = _ivf_quantize(
+        embeddings, dim, nlist, iters, id_col, vec_col, centroids
     )
     hot = (
         assigned.groupBy("cell")
