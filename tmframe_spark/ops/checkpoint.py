@@ -6,18 +6,20 @@ acknowledged unit. The Spark analog: a rollup job over a date-partitioned
 table writes one JSON manifest per (day) partition recording input lineage
 and throughput metrics; a resumed run anti-joins the done-manifest set and
 processes only missing partitions. flock single-writer protection
-(archiver/filemgr.go:140-163) becomes atomic rename of the manifest file.
+(archiver/filemgr.go:140-163) becomes the atomic, fsynced manifest commit
+of data/commit.py.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tmframe_spark.data.commit import read_json, write_json
 
 
 @dataclass
@@ -37,24 +39,13 @@ def manifest_path(root: str, partition: str) -> str:
 
 
 def write_manifest(root: str, m: PartitionManifest) -> str:
-    os.makedirs(root, exist_ok=True)
     path = manifest_path(root, m.partition)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(asdict(m), f)
-    os.replace(tmp, path)  # atomic commit = the flock/ack analog
+    write_json(path, asdict(m))  # atomic commit = the flock/ack analog
     return path
 
 
 def done_partitions(root: str) -> set[str]:
-    if not os.path.isdir(root):
-        return set()
-    out = set()
-    for fn in os.listdir(root):
-        if fn.endswith(".json"):
-            with open(os.path.join(root, fn)) as f:
-                out.add(json.load(f)["partition"])
-    return out
+    return set(read_manifests(root))
 
 
 def pending_days(transcripts: DataFrame, manifest_root: str) -> list[str]:
@@ -80,8 +71,7 @@ def read_manifests(root: str) -> dict[str, dict]:
     out = {}
     for fn in os.listdir(root):
         if fn.endswith(".json"):
-            with open(os.path.join(root, fn)) as f:
-                m = json.load(f)
+            m = read_json(os.path.join(root, fn))
             out[m["partition"]] = m
     return out
 

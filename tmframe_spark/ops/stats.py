@@ -226,8 +226,9 @@ def ewma(
     applies one vectorized numpy step to row j of EVERY group at once
     (max-group-length iterations of whole-array ops instead of n Python
     steps). When one group dominates the batch (max group length > n/8,
-    where the transpose would degenerate into per-row vector calls), the
-    original scalar loop runs instead — it doubles as the semantics twin.
+    or > n/2 in a batch of 64+ groups), where the transpose would
+    degenerate into per-row vector calls, the scalar loop runs instead —
+    it doubles as the semantics twin.
     The recurrence itself is unchanged and exact: arithmetic >> on int64
     is the same floor shift in numpy and Python.
 
@@ -272,7 +273,7 @@ def ewma(
             gstarts = _np.flatnonzero(change)
             lengths = _np.diff(_np.append(gstarts, n))
             max_len = int(lengths.max())
-            if max_len <= n // 8 or len(gstarts) >= 64:
+            if max_len <= n // 8 or (len(gstarts) >= 64 and max_len <= n // 2):
                 # transposed vector scan (groups in parallel)
                 G = len(gstarts)
                 S = _np.zeros(G, dtype=_np.int64)

@@ -23,7 +23,7 @@ protocol, per batch:
 
 The token is a pure function of (table_root, batch_id), so every replay
 of a micro-batch names the same index batch. Single writer per index
-(the module-wide assumption). Survivors are internally deduped too
+(the data/commit.py contract). Survivors are internally deduped too
 (within_batch=True), so the index only ever holds clean text.
 """
 

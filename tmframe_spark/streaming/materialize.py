@@ -13,8 +13,8 @@ Semantics & idempotency:
   its OWN ``batch=<id>/`` subtree with mode=overwrite: a replayed batch
   rewrites the same directory, so a crash at ANY point (including between
   the data write and the manifest commit) cannot duplicate rows. The atomic
-  per-batch manifest (the ops/checkpoint rename pattern) then only records
-  metrics and lets clean replays skip recomputation. Readers glob
+  per-batch manifest (data/commit.write_json) then only records metrics and
+  lets clean replays skip recomputation. Readers glob
   ``batch=*/day=*`` — day partition pruning still applies.
 - An Iceberg catalog upgrades this to update-mode MERGE for re-emitted
   refinements; with the parquet layout we stay in append mode by design.
@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tmframe_spark.data.commit import read_json, write_json
 from tmframe_spark.streaming.stream import read_transcript_stream, stream_rollup
 
 
@@ -50,22 +51,18 @@ def _exactly_once_writer(table_root: str, table: str, write_fn):
     here: skip batches with a committed manifest (clean replay), let
     ``write_fn(df, batch_dir) -> metrics`` overwrite its batch-scoped
     directory (idempotent under at-least-once replays, even after a crash
-    mid-write), then commit metrics atomically via tmp+rename (the
-    ops/checkpoint pattern). One protocol, one place — the rollup and
-    block sinks cannot drift apart in replay semantics."""
+    mid-write), then commit metrics with data/commit.write_json. One
+    protocol, one place — the rollup and block sinks cannot drift apart in
+    replay semantics."""
     out_dir = os.path.join(table_root, table)
     man_dir = os.path.join(table_root, f"_{table}_batches")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
-        os.makedirs(man_dir, exist_ok=True)
         mpath = os.path.join(man_dir, f"batch-{batch_id}.json")
         if os.path.exists(mpath):
             return
         metrics = write_fn(df, os.path.join(out_dir, f"batch={batch_id}"))
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, **metrics}, f)
-        os.replace(tmp, mpath)
+        write_json(mpath, {"batch_id": batch_id, **metrics})
 
     return write_batch
 
@@ -129,8 +126,8 @@ def record_late_drops(
     only). Spark does count those rows: the stateful aggregation reports
     ``numRowsDroppedByWatermark`` per micro-batch in its progress events.
     This helper folds that counter into each ``batch-<id>.json`` manifest
-    (atomic rewrite, same tmp+rename protocol) as ``late_dropped_rows`` and
-    returns ``{batch_id: dropped}``.
+    (rewritten through data/commit.write_json) as ``late_dropped_rows``
+    and returns ``{batch_id: dropped}``.
 
     Two measured quirks of this counter (pinned by the round-4 tests): the
     late filter uses the PREVIOUS batch's watermark — eviction uses the
@@ -161,19 +158,12 @@ def record_late_drops(
             for op in prog.get("stateOperators", [])
         )
         out[int(bid)] = dropped
-        os.makedirs(man_dir, exist_ok=True)
         mpath = os.path.join(man_dir, f"batch-{bid}.json")
-        manifest = {"batch_id": int(bid)}
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                manifest = json.load(f)
+        manifest = read_json(mpath, {"batch_id": int(bid)})
         if manifest.get("late_dropped_rows") == dropped:
             continue
         manifest["late_dropped_rows"] = dropped
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
+        write_json(mpath, manifest)
     return out
 
 
@@ -211,19 +201,7 @@ def _consolidation_manifest_path(table_root: str, table: str) -> str:
 
 def read_consolidation_manifest(table_root: str, table: str) -> dict:
     """``{day: {"blocks": n, "pruned": bool}}`` for every consolidated day."""
-    path = _consolidation_manifest_path(table_root, table)
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f)
-
-
-def _commit_consolidation_manifest(table_root: str, table: str, manifest: dict):
-    path = _consolidation_manifest_path(table_root, table)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    os.replace(tmp, path)
+    return read_json(_consolidation_manifest_path(table_root, table), {})
 
 
 def consolidate_stream_blocks(
@@ -255,7 +233,7 @@ def consolidate_stream_blocks(
     Bookkeeping (round-3 advice: the consumed stream data was neither
     marked nor pruned, so the same days were servable from two tables and
     the streamed table grew without bound): every consolidated day is
-    recorded in ``_<table>_consolidated.json`` (atomic tmp+rename). A day
+    recorded in ``_<table>_consolidated.json`` (data/commit.write_json). A day
     recorded there is CONSUMED — readers wanting consolidated days must use
     the Catalog archive; ``read_materialized`` still sees the raw stream
     table and double-counts if combined naively. With ``prune=True`` the
@@ -297,7 +275,7 @@ def consolidate_stream_blocks(
         cat.overwrite_day(name, canonical.where(F.col("day").cast("string") == d), d)
         out[d] = int(r["n"])
         manifest[d] = {"blocks": int(r["n"]), "pruned": bool(prune)}
-        _commit_consolidation_manifest(table_root, table, manifest)
+        write_json(_consolidation_manifest_path(table_root, table), manifest)
         if prune:
             for src in _glob.glob(
                 os.path.join(table_root, table, "batch=*", f"day={d}")

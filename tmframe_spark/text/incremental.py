@@ -37,8 +37,8 @@ ingest-then-serve lifecycle (SURVEY §2.1 S10) applied to the dedup domain.
 Crash atomicity (round-5 verdict finding #3): each ingest writes its rows
 under a fresh ``batch=<token>`` partition in all three tables, and the
 batch token is added to ``meta.json``'s ``batches`` list ONLY after all
-three writes succeed (``os.replace`` — the same atomic fence as the
-consolidation manifest). Probes filter every table to committed batches,
+three writes succeed — the batch-token fence of data/commit.py, shared
+with the IVF+PQ index. Probes filter every table to committed batches,
 so a crash anywhere mid-append leaves the index answering exactly as if
 the batch never arrived; tokens are never reused, so a retried ingest can
 never double-count a half-written batch. ``minhash_index_vacuum`` removes
@@ -47,12 +47,12 @@ uncommitted batch directories after a crash.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tmframe_spark.data.commit import append_batch, read_meta, vacuum, write_meta
 from tmframe_spark.text.dedup import (
     band_buckets,
     dedup_keep_canonical,
@@ -67,21 +67,10 @@ from tmframe_spark.text.dedup import (
 INDEX_NMODS = 64
 
 
-def _meta_path(path: str) -> str:
-    return os.path.join(path, "meta.json")
+#: the three index tables, each partitioned by ``batch=<token>`` first
+_TABLES = ("sigs", "bands", "exact")
 
-
-def _write_meta(path: str, meta: dict) -> None:
-    os.makedirs(path, exist_ok=True)
-    tmp = _meta_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f, sort_keys=True)
-    os.replace(tmp, _meta_path(path))  # atomic: readers see old or new
-
-
-def read_index_meta(path: str) -> dict:
-    with open(_meta_path(path)) as f:
-        return json.load(f)
+read_index_meta = read_meta
 
 
 def _mod(col, nmods: int):
@@ -166,7 +155,7 @@ def minhash_index_write(
         "batches": [batch],
     }
     if mode == "overwrite":
-        _write_meta(path, meta)  # the commit fence: tables first, meta last
+        write_meta(path, meta)  # the commit fence: tables first, meta last
     return meta
 
 
@@ -183,7 +172,7 @@ def minhash_index_append(
     cannot drift k/bands/shingle_k between batches.
 
     CRASH-ATOMIC: the three table appends land under one fresh batch token,
-    and the token is committed into ``meta.json`` (atomic ``os.replace``)
+    and the token is committed into ``meta.json`` (data/commit.append_batch)
     only after every write succeeded. Probes read committed batches only,
     so a crash at ANY point in here makes the whole batch invisible — never
     a sigs/bands/exact mix that silently under-detects duplicates.
@@ -195,52 +184,24 @@ def minhash_index_append(
     token's half-written directories, then re-appends — so at-least-once
     callers converge to exactly-once. Without it a fresh random token is
     used (the one-shot form; a crashed attempt's directories are garbage
-    until ``minhash_index_vacuum``). Single-writer per index assumed, as
-    everywhere in this module."""
-    meta = read_index_meta(path)
-    if batch is not None and batch in meta.get("batches", []):
-        return meta  # replay of a committed append: exactly-once no-op
-    if batch is not None:
-        _vacuum_token(path, batch)  # clear a crashed attempt's partial dirs
-    params = {x: meta[x] for x in ("k", "bands", "shingle_k", "nmods")}
-    written = minhash_index_write(
-        df, path, id_col, text_col, mode="append", batch=batch, sigs=sigs, **params
-    )
-    new_batch = written["batches"][0]
-    committed = dict(meta, batches=meta.get("batches", []) + [new_batch])
-    _write_meta(path, committed)
-    return committed
+    until ``minhash_index_vacuum``). Single writer per index (the
+    data/commit.py contract)."""
 
+    def write(meta: dict, token: str) -> None:
+        params = {x: meta[x] for x in ("k", "bands", "shingle_k", "nmods")}
+        minhash_index_write(
+            df, path, id_col, text_col, mode="append", batch=token, sigs=sigs,
+            **params,
+        )
 
-def _vacuum_token(path: str, token: str) -> None:
-    """Remove one (uncommitted) token's directories from all three tables —
-    the targeted retry-cleanup inside minhash_index_append; the full sweep
-    is minhash_index_vacuum."""
-    import shutil
-
-    for table in ("sigs", "bands", "exact"):
-        d = os.path.join(path, table, f"batch={token}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    return append_batch(path, _TABLES, batch, write)
 
 
 def minhash_index_vacuum(path: str) -> list[str]:
     """Delete UNCOMMITTED batch directories (a crashed ingest's leftovers)
     from the three tables; returns the removed batch tokens. Safe to run
     concurrently with probes: probes never read uncommitted batches."""
-    import shutil
-
-    committed = set(read_index_meta(path).get("batches", []))
-    removed = set()
-    for table in ("sigs", "bands", "exact"):
-        troot = os.path.join(path, table)
-        if not os.path.isdir(troot):
-            continue
-        for d in os.listdir(troot):
-            if d.startswith("batch=") and d.split("=", 1)[1] not in committed:
-                shutil.rmtree(os.path.join(troot, d))
-                removed.add(d.split("=", 1)[1])
-    return sorted(removed)
+    return vacuum(path, _TABLES)
 
 
 #: the three table write schemas (minhash_index_write), used to answer

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tmframe_spark.data.commit import append_batch, read_meta, vacuum, write_meta
 from tmframe_spark.vec.similarity import _Q
 
 #: hard bound on the driver-side training collect: sample_cap x dim float64
@@ -422,7 +423,7 @@ def ivfpq_build_index(
         ],
         "sub int, code int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    _ivfpq_write_meta(path, {
+    write_meta(path, {
         "residual": bool(residual),
         "store_vectors": bool(store_vectors),
         "nlist": int(nlist), "m": int(m), "ksub": int(ksub),
@@ -446,48 +447,17 @@ def ivfpq_load_meta(spark, path: str):
     return cents, books
 
 
-def _ivfpq_meta_path(path: str) -> str:
-    import os
+#: the batch-partitioned tables (``vectors`` only when store_vectors)
+_IVFPQ_TABLES = ("codes", "vectors")
 
-    return os.path.join(path, "meta.json")
-
-
-def _ivfpq_write_meta(path: str, meta: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = _ivfpq_meta_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f, sort_keys=True)
-    os.replace(tmp, _ivfpq_meta_path(path))  # atomic: readers see old or new
-
-
-def ivfpq_read_meta(path: str) -> dict:
-    import json
-
-    with open(_ivfpq_meta_path(path)) as f:
-        return json.load(f)
+ivfpq_read_meta = read_meta
 
 
 def ivfpq_vacuum(path: str) -> list[str]:
     """Delete UNCOMMITTED batch directories (a crashed append's leftovers)
     from the codes and vectors tables; returns the removed tokens. Safe
     alongside serving: probes never read uncommitted batches."""
-    import os
-    import shutil
-
-    committed = set(ivfpq_read_meta(path).get("batches", []))
-    removed = set()
-    for table in ("codes", "vectors"):
-        troot = os.path.join(path, table)
-        if not os.path.isdir(troot):
-            continue
-        for d in os.listdir(troot):
-            if d.startswith("batch=") and d.split("=", 1)[1] not in committed:
-                shutil.rmtree(os.path.join(troot, d))
-                removed.add(d.split("=", 1)[1])
-    return sorted(removed)
+    return vacuum(path, _IVFPQ_TABLES)
 
 
 def ivfpq_append(
@@ -510,56 +480,44 @@ def ivfpq_append(
     lands under ``batch=<token>`` partitions in codes (and vectors, when
     the index stores them), the token commits into meta.json last; an
     explicit ``batch`` token makes retries converge (committed -> no-op,
-    uncommitted -> vacuum the token's dirs, re-append). Single writer per
-    index assumed."""
-    import os
-    import shutil
-    import uuid
-
+    uncommitted -> vacuum the token's dirs, re-append). The fence is
+    data/commit.append_batch; single writer per index, its contract."""
     from tmframe_spark.vec.similarity import _ivf_quantize
 
-    meta = ivfpq_read_meta(path)
-    if batch is not None and batch in meta.get("batches", []):
-        return meta  # replay of a committed append: exactly-once no-op
-    token = batch or uuid.uuid4().hex
-    for table in ("codes", "vectors"):
-        d = os.path.join(path, table, f"batch={token}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)  # a crashed attempt's partial write
-    cents, books = ivfpq_load_meta(embeddings.sparkSession, path)
-    spark = embeddings.sparkSession
-    # frozen quantizer: only the assignment route applies (no training)
-    _, assigned = _ivf_quantize(
-        embeddings, len(cents[0]), len(cents), 0, id_col, vec_col, centroids=cents
-    )
-    assigned = assigned.localCheckpoint(eager=True)
-    if meta.get("residual", False):
-        cdf = spark.createDataFrame(
-            [(c, [float(x) for x in v]) for c, v in enumerate(cents)],
-            "cell int, _cent array<double>",
+    def write(meta: dict, token: str) -> None:
+        cents, books = ivfpq_load_meta(embeddings.sparkSession, path)
+        spark = embeddings.sparkSession
+        # frozen quantizer: only the assignment route applies (no training)
+        _, assigned = _ivf_quantize(
+            embeddings, len(cents[0]), len(cents), 0, id_col, vec_col, centroids=cents
         )
-        enc_src = assigned.join(F.broadcast(cdf), "cell").select(
-            id_col,
-            "cell",
-            F.zip_with(
-                F.col(vec_col), F.col("_cent"), lambda x, c: x.cast("double") - c
-            ).alias("_res"),
-        )
-        codes = pq_encode(enc_src, books, id_col, "_res", carry_cols=("cell",))
-    else:
-        codes = pq_encode(assigned, books, id_col, vec_col, carry_cols=("cell",))
-    codes.select("*", F.lit(token).alias("batch")).repartition("cell").write.mode(
-        "append"
-    ).partitionBy("batch", "cell").parquet(f"{path}/codes")
-    if meta.get("store_vectors", False):
-        assigned.select(
-            id_col, vec_col, "cell", F.lit(token).alias("batch")
-        ).repartition("cell").write.mode("append").partitionBy(
-            "batch", "cell"
-        ).parquet(f"{path}/vectors")
-    committed = dict(meta, batches=meta.get("batches", []) + [token])
-    _ivfpq_write_meta(path, committed)  # the commit fence
-    return committed
+        assigned = assigned.localCheckpoint(eager=True)
+        if meta.get("residual", False):
+            cdf = spark.createDataFrame(
+                [(c, [float(x) for x in v]) for c, v in enumerate(cents)],
+                "cell int, _cent array<double>",
+            )
+            enc_src = assigned.join(F.broadcast(cdf), "cell").select(
+                id_col,
+                "cell",
+                F.zip_with(
+                    F.col(vec_col), F.col("_cent"), lambda x, c: x.cast("double") - c
+                ).alias("_res"),
+            )
+            codes = pq_encode(enc_src, books, id_col, "_res", carry_cols=("cell",))
+        else:
+            codes = pq_encode(assigned, books, id_col, vec_col, carry_cols=("cell",))
+        codes.select("*", F.lit(token).alias("batch")).repartition("cell").write.mode(
+            "append"
+        ).partitionBy("batch", "cell").parquet(f"{path}/codes")
+        if meta.get("store_vectors", False):
+            assigned.select(
+                id_col, vec_col, "cell", F.lit(token).alias("batch")
+            ).repartition("cell").write.mode("append").partitionBy(
+                "batch", "cell"
+            ).parquet(f"{path}/vectors")
+
+    return append_batch(path, _IVFPQ_TABLES, batch, write)
 
 
 def _pq_topk_residual(
