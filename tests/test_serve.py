@@ -186,3 +186,153 @@ def test_zone_filter_pushes_to_parquet_scan(spark, tmp_path):
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert pushed, plan
     assert "ts_last" in pushed[0] and "ts_first" in pushed[0], pushed[0]
+
+
+_ASOF_VARIANTS = [(strict, tie) for strict in (False, True) for tie in ("last", "first")]
+
+
+def _sorted_frame(df, order):
+    pdf = df.orderBy(order).toPandas()
+    return pdf[sorted(pdf.columns)].reset_index(drop=True)
+
+
+def test_serve_asof_duplicate_timestamps_follow_seq_order(spark):
+    """Tied timestamps inside a block: tie='first'/'last' pick the first/last
+    stored point of the run, i.e. the lowest/highest arrival seq — the same
+    rows asof_join picks over the raw points with seq as the tiebreaker."""
+    from tmframe_spark.ops.asof import asof_join
+    from tmframe_spark.ops.serve import serve_asof
+
+    pts = spark.createDataFrame(
+        [
+            ("a", "d1", 1000, 1.0, 1, 0),
+            ("a", "d1", 2000, 2.0, 2, 1),
+            ("a", "d1", 2000, 3.0, 3, 2),
+            ("a", "d1", 2000, 4.0, 4, 3),
+            ("a", "d1", 3000, 5.0, 5, 4),
+            ("a", "d2", 5000, 6.0, 6, 5),
+            ("a", "d2", 5000, 7.0, 7, 6),
+        ],
+        "conv_id string, day string, ts_ns long, v0 double, v1 long, seq long",
+    )
+    blocks = pack_blocks(
+        pts, ["conv_id", "day"], v0="v0", v1="v1", seq="seq"
+    ).localCheckpoint()
+    probes = spark.createDataFrame(
+        [("a", t) for t in (999, 2000, 2500, 3000, 5000, 6000)],
+        "conv_id string, ts_ns long",
+    )
+    order = ["conv_id", "ts_ns"]
+    for strict, tie in _ASOF_VARIANTS:
+        got = serve_asof(
+            blocks, ["conv_id", "day"], ["conv_id"], probes, tie=tie, strict=strict
+        )
+        want = asof_join(
+            probes, pts, on="ts_ns", by=["conv_id"], seq="seq",
+            value_cols=["v0", "v1"], tie=tie, strict=strict, prefix="m_",
+        ).drop("m_seq")
+        pd.testing.assert_frame_equal(
+            _sorted_frame(got, order), _sorted_frame(want, order), obj=f"strict={strict} tie={tie}"
+        )
+
+
+def test_serve_asof_edge_cases_equal_decode_all_asof(spark):
+    """A tiny archive whose 3-block series has gaps between its blocks:
+    duplicate probe rows, a carried probe column, a probe in a gap, a probe
+    on a block's ts_first under strict, probes before/after the series, an
+    ``on`` column not named ts_ns and ``v1=None`` all match decode-everything
+    asof_join; and blocks_for_asof picks exactly the expected blocks."""
+    from tmframe_spark.ops.asof import asof_join
+    from tmframe_spark.ops.serve import blocks_for_asof, serve_asof
+
+    keys = ["conv_id", "day"]
+    pts = spark.createDataFrame(
+        [
+            ("a", "d1", 1000, 1.0), ("a", "d1", 2000, 2.0), ("a", "d1", 3000, 3.0),
+            ("a", "d2", 5000, 4.0), ("a", "d2", 6000, 5.0),
+            ("a", "d3", 9000, 6.0), ("a", "d3", 9500, 7.0),
+            ("b", "d1", 1500, 8.0),
+        ],
+        "conv_id string, day string, ts_ns long, v0 double",
+    )
+    blocks = pack_blocks(pts, keys, v0="v0").localCheckpoint()
+    probes = spark.createDataFrame(
+        [
+            ("a", 10, 0),      # before the series -> InPast
+            ("a", 1500, 1),
+            ("a", 1500, 1),    # duplicate probe row
+            ("a", 4000, 2),    # gap between the d1 and d2 blocks
+            ("a", 5000, 3),    # d2's ts_first: strict answers from d1
+            ("a", 9500, 4),    # last stored instant
+            ("a", 99999, 5),   # past the end -> InFuture
+            ("b", 1500, 6),    # single-point series
+            ("c", 1500, 7),    # series with no blocks -> InPast
+        ],
+        "conv_id string, t long, probe_hour long",
+    )
+    decoded = unpack_blocks(blocks, keys, v0="v0", v1=None).withColumnRenamed(
+        "ts_ns", "t"
+    )
+    order = ["conv_id", "t", "probe_hour"]
+    for strict, tie in _ASOF_VARIANTS:
+        got = serve_asof(
+            blocks, keys, ["conv_id"], probes, on="t", v1=None, tie=tie, strict=strict
+        )
+        assert got.columns == [
+            "conv_id", "t", "probe_hour", "m_t", "m_v0", "status"
+        ]
+        want = asof_join(
+            probes, decoded.withColumn("_seq", F.col("t")), on="t",
+            by=["conv_id"], seq="_seq", value_cols=["v0"], tie=tie,
+            strict=strict, prefix="m_",
+        ).drop("m__seq")
+        pd.testing.assert_frame_equal(
+            _sorted_frame(got, order), _sorted_frame(want, order), obj=f"strict={strict} tie={tie}"
+        )
+
+    # a missing v1 stream reads as 0, like unpack_blocks
+    filled = serve_asof(blocks, keys, ["conv_id"], probes, on="t").where(
+        F.col("m_t").isNotNull()
+    )
+    assert filled.schema["m_v1"].dataType.simpleString() == "bigint"
+    assert {r["m_v1"] for r in filled.collect()} == {0}
+
+    def picked(strict):
+        return sorted(
+            (r["conv_id"], r["day"])
+            for r in blocks_for_asof(
+                blocks, ["conv_id"], probes, "t", strict=strict
+            ).collect()
+        )
+
+    assert picked(False) == [("a", "d1"), ("a", "d2"), ("a", "d3"), ("b", "d1")]
+    # strict: 5000 falls back to d1 and b's only point equals its probe
+    assert picked(True) == [("a", "d1"), ("a", "d3")]
+
+
+def _walk(plan, ancestors=()):
+    """Every node under ``plan`` (a JVM SparkPlan), with its ancestors' names."""
+    yield plan, ancestors
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _walk(kids.apply(i), ancestors + (plan.nodeName(),))
+
+
+def test_serve_asof_plan_answers_inside_the_decode(spark):
+    """One Python pass and nothing point-level above it: exactly one
+    MapInPandas node, no Window, Exchange or aggregate among its ancestors,
+    and the block-picking window below it."""
+    from tmframe_spark.ops.serve import serve_asof
+
+    blocks = _blocks(spark).localCheckpoint()
+    probes = spark.createDataFrame([("c", 1)], "conv_id string, ts_ns long")
+    out = serve_asof(blocks, ["conv_id", "day"], ["conv_id"], probes)
+    plan = out._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()  # the whole plan, before any stage runs
+    passes = [(n, anc) for n, anc in _walk(plan) if n.nodeName() == "MapInPandas"]
+    assert len(passes) == 1, plan.toString()
+    node, ancestors = passes[0]
+    bad = [a for a in ancestors if any(w in a for w in ("Window", "Exchange", "Aggregate"))]
+    assert not bad, plan.toString()
+    assert "Window" in [n.nodeName() for n, _ in _walk(node)], plan.toString()

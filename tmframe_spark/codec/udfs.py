@@ -674,6 +674,18 @@ def pack_rollup_blocks(
     return sparse_blocks.unionByName(dense_blocks).unionByName(empty_blocks)
 
 
+def _block_payloads(frames: pd.Series) -> list:
+    """Block payloads of a column of marshalled EV_BLOCK frames: one
+    vectorized unmarshal over the column, failing closed on any frame that
+    is not an EV_BLOCK record."""
+    fr = unmarshal_frames(b"".join(bytes(x) for x in frames))
+    evs = get_evtnum(fr.prim, fr.ude)
+    if (evs != EV_BLOCK).any():
+        bad = int(evs[(evs != EV_BLOCK).argmax()])
+        raise ValueError(f"expected EV_BLOCK frame, got evtnum {bad}")
+    return fr.data
+
+
 def unpack_blocks(
     blocks: DataFrame,
     keys: list[str],
@@ -733,16 +745,10 @@ def unpack_blocks(
                 end = min(max(end, start + 1), n)  # an oversize block rides alone
                 sl = pdf.iloc[start:end]
                 start = end
-                # one vectorized unmarshal over the slice's wire frames
-                fr = unmarshal_frames(b"".join(bytes(x) for x in sl[frame_col]))
-                evs = get_evtnum(fr.prim, fr.ude)
-                if (evs != EV_BLOCK).any():
-                    bad = int(evs[(evs != EV_BLOCK).argmax()])
-                    raise ValueError(f"expected EV_BLOCK frame, got evtnum {bad}")
                 key_cols = {k: sl[k].to_numpy() for k in keys}
                 ts_l, v0_l, v1_l, reps = [], [], [], []
-                for i in range(len(sl)):
-                    ts, a0, a1 = decode_block(fr.data[i])
+                for payload in _block_payloads(sl[frame_col]):
+                    ts, a0, a1 = decode_block(payload)
                     ts_l.append(ts)
                     reps.append(len(ts))
                     if v0:
@@ -760,6 +766,95 @@ def unpack_blocks(
                 if v1:
                     d[v1] = np.concatenate(v1_l)
                 yield pd.DataFrame(d)
+
+    return blocks.mapInPandas(fn, out_schema)
+
+
+def asof_in_blocks(
+    blocks: DataFrame,
+    by: list[str],
+    on: str,
+    v0: str | None = "v0",
+    v1: str | None = "v1",
+    tie: str = "last",
+    strict: bool = False,
+    frame_col: str = "frame",
+) -> DataFrame:
+    """Answer as-of probes inside the decode of the one block that holds them.
+
+    Input: one row per block — ``by`` columns, ``frame_col``, ``_probes``
+    (array of struct(``on``, probe columns...): the probes whose answer lies
+    in this block) and ``_latest`` (the block starts its series' latest
+    block). Output: one row per probe — ``by``, ``on``, the probe columns,
+    ``m_<on>``, ``m_<v0>``, ``m_<v1>``, ``status``.
+
+    Each block is decoded once and its probes are answered by
+    ``np.searchsorted`` over the decoded timestamps (stored in (ts, seq)
+    order): the last stored point ``<=`` the probe (``<`` when ``strict``);
+    ``tie='first'`` moves to the first point of that equal-timestamp run —
+    the reference's in-block binary search (series.go:58-244). Decoded
+    points never leave the worker. Status is InFuture past the last point
+    of a ``_latest`` block, else Avail. Missing value streams fill like
+    ``unpack_blocks``: NaN for v0, 0 for v1.
+    """
+    from pyspark.sql.types import DoubleType, StringType
+
+    from tmframe_spark.ops.asof import AVAIL, IN_FUTURE
+
+    if tie not in ("first", "last"):
+        raise ValueError("tie must be 'first' or 'last'")
+    probe_type = blocks.schema["_probes"].dataType.elementType
+    probe_cols = probe_type.fieldNames()
+    fields = (
+        _key_fields(blocks, by)
+        + list(probe_type.fields)
+        + [StructField(f"m_{on}", LongType())]
+    )
+    if v0:
+        fields.append(StructField(f"m_{v0}", DoubleType()))
+    if v1:
+        fields.append(StructField(f"m_{v1}", LongType()))
+    out_schema = StructType(fields + [StructField("status", StringType())])
+    side = "left" if strict else "right"
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            lists = pdf["_probes"].to_numpy()
+            counts = np.fromiter((len(x) for x in lists), np.int64, len(lists))
+            probes = pd.DataFrame.from_records(
+                [p for x in lists for p in x], columns=probe_cols
+            )
+            q_all = probes[on].to_numpy(np.int64)
+            ends = counts.cumsum().tolist()
+            m_ts, m_a0, m_a1, status = [], [], [], []
+            for payload, latest, lo, hi in zip(
+                _block_payloads(pdf[frame_col]), pdf["_latest"], [0] + ends, ends
+            ):
+                ts, a0, a1 = decode_block(payload)
+                q = q_all[lo:hi]
+                j = np.searchsorted(ts, q, side) - 1
+                if (j < 0).any():
+                    # the pick guarantees ts_first precedes every probe here
+                    raise ValueError("block payload starts after its ts_first")
+                if tie == "first":
+                    j = np.searchsorted(ts, ts[j], "left")
+                m_ts.append(ts[j])
+                m_a0.append(a0[j] if a0 is not None else np.full(len(j), np.nan))
+                m_a1.append(a1[j] if a1 is not None else np.zeros(len(j), np.int64))
+                status.append(
+                    np.where(bool(latest) & (q > ts[-1]), IN_FUTURE, AVAIL)
+                )
+            out = {b: np.repeat(pdf[b].to_numpy(), counts) for b in by}
+            out.update((c, probes[c]) for c in probe_cols)
+            out[f"m_{on}"] = np.concatenate(m_ts)
+            if v0:
+                out[f"m_{v0}"] = np.concatenate(m_a0)
+            if v1:
+                out[f"m_{v1}"] = np.concatenate(m_a1)
+            out["status"] = np.concatenate(status)
+            yield pd.DataFrame(out)
 
     return blocks.mapInPandas(fn, out_schema)
 

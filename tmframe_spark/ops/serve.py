@@ -16,12 +16,22 @@ This is the engine's analog of the reference's tfindex use-case: tfindex
 writes minute-boundary byte offsets so readers can seek instead of scanning
 (/root/reference/cmd/tfindex/tfindex.go:44-98); here the block min/max
 stats turn the seek into a Catalyst filter that storage prunes on.
+
+As-of reads seek the same way, then search inside the one block they
+land in: one window over probe rows and block metadata picks, per probe,
+the block that can hold its answer (``blocks_for_asof``), and
+``serve_asof`` answers each probe by binary search in the Python pass that
+decodes that block (``codec.udfs.asof_in_blocks``). Decoded points never
+become Spark rows; the pass emits one row per probe.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def blocks_overlapping(
@@ -43,6 +53,68 @@ def blocks_overlapping(
     )
 
 
+def _asof_picks(
+    blocks: DataFrame,
+    by: list[str],
+    probes: DataFrame,
+    on: str,
+    strict: bool,
+) -> DataFrame:
+    """Every probe row, all of its columns kept, plus ``_pick`` — the
+    greatest block ``ts_first`` of its series at or before the probe
+    (strictly before when ``strict``), null when there is none — and
+    ``_latest``, true when ``_pick`` is the series' latest block start.
+
+    One window over the probe rows unioned with one ``(by, ts_first)``
+    metadata row per block: P probes against B blocks move P + B small
+    rows, never P x B pairs and never a decoded point. Probes sort before
+    metadata at equal instants when ``strict``, after it otherwise (the
+    ordering rule of ``ops.asof.asof_join``). No reduce step is needed:
+    block starts are unique per series (disjoint spans, see
+    ``blocks_for_asof``).
+    """
+    probe_pos, meta_pos = (0, 1) if strict else (1, 0)
+    pcols = [c for c in probes.columns if c not in by and c != on]
+    p = probes.select(
+        *by,
+        on,
+        *pcols,
+        F.lit(probe_pos).alias("_pos"),
+        F.lit(None).cast("long").alias("_blk"),
+    )
+    m = blocks.select(
+        *by,
+        F.col("ts_first").alias(on),
+        *[F.lit(None).cast(probes.schema[c].dataType).alias(c) for c in pcols],
+        F.lit(meta_pos).alias("_pos"),
+        F.col("ts_first").alias("_blk"),
+    )
+    run = (
+        Window.partitionBy(*by)
+        .orderBy(F.col(on).asc(), F.col("_pos").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        p.unionByName(m)
+        .select(
+            *by,
+            on,
+            *pcols,
+            "_pos",
+            F.last("_blk", ignorenulls=True).over(run).alias("_pick"),
+            F.max("_blk").over(Window.partitionBy(*by)).alias("_last_start"),
+        )
+        .where(F.col("_pos") == F.lit(probe_pos))
+        .select(
+            *by,
+            on,
+            *pcols,
+            "_pick",
+            (F.col("_pick") == F.col("_last_start")).alias("_latest"),
+        )
+    )
+
+
 def blocks_for_asof(
     blocks: DataFrame,
     by: list[str],
@@ -58,35 +130,17 @@ def blocks_for_asof(
     with the greatest ``ts_first`` at-or-before / before it: every later
     block starts after the probe and holds no eligible point, and every
     eligible point of an earlier block precedes this block's own
-    ``ts_first`` (itself an eligible point). The selection is therefore an
-    as-of join over the block METADATA — one row per block, not per point —
-    reusing the engine's union-merge asof plan: P probes against a B-block
-    series shuffle P + B metadata rows, never P x B pairs and never a
-    decoded point. Returns the distinct selected blocks (at most
-    min(P, B) of them).
+    ``ts_first`` (itself an eligible point). The selection is a window
+    over the block METADATA — one row per block, not per point — and a
+    left-semi join on the picks. Returns the distinct selected blocks (at
+    most min(P, B) of them); a null series key matches no block.
     """
-    from tmframe_spark.ops.asof import asof_join
-
-    meta = blocks.select(
-        *by, F.col("ts_first").alias(on), F.col("ts_first").alias("_blk")
+    picks = _asof_picks(blocks, by, probes.select(*by, on), on, strict)
+    return blocks.join(
+        picks.select(*by, F.col("_pick").alias("ts_first")),
+        [*by, "ts_first"],
+        "left_semi",
     )
-    sel = asof_join(
-        probes.select(*by, on).dropDuplicates(),
-        meta,
-        on=on,
-        by=by,
-        seq="_blk",
-        value_cols=["_blk"],
-        tie="last",
-        strict=strict,
-        prefix="_m_",
-    )
-    picked = (
-        sel.where(F.col("_m__blk").isNotNull())
-        .select(*by, F.col("_m__blk").alias("ts_first"))
-        .dropDuplicates()
-    )
-    return blocks.join(picked, [*by, "ts_first"], "left_semi")
 
 
 def serve_asof(
@@ -103,58 +157,72 @@ def serve_asof(
 ) -> DataFrame:
     """Two-level as-of over the packed archive — the tfindex seek, made
     distributed (/root/reference/cmd/tfindex/tfindex.go:44-98 +
-    series.go:58-244): level 1 as-of joins the probes against the block
-    metadata (``blocks_for_asof``) to select, per probe, the one block that
-    can hold the answer; level 2 decodes ONLY those blocks and runs the
-    exact reference as-of semantics over their points.
+    series.go:58-244): level 1 picks, per probe, the one block that can
+    hold the answer with one window over probes + block metadata (the
+    selection ``blocks_for_asof`` makes); level 2 decodes each picked block
+    once and answers its probes inside that decode by binary search
+    (``codec.udfs.asof_in_blocks``). Decoded points never become rows.
 
     Equivalent to ``asof_join(probes, unpack_blocks(blocks, ...), ...)``
-    (same matched rows AND the same SearchStatus), while decoding at most
-    one block per probe instead of the whole archive. Status is computed
-    from zone maps — the series max point timestamp is max(ts_last), exact
-    because block bounds equal decoded point min/max (property-tested in
-    tests/test_serve.py) — so InFuture detection does not depend on the
-    pruned subset.
+    with the stored (ts, seq) order as the tiebreaker — same matched rows
+    AND the same SearchStatus — while decoding at most one block per probe
+    instead of the whole archive. InFuture needs only the series' latest
+    block: a probe picks an earlier block only when a later block starts
+    after it. A probe with no pick (before the series, or a null series
+    key) is InPast without reaching Python.
 
     ``keys``: the block-table group keys (e.g. [conv, day]); ``by``: the
     series keys for the as-of (e.g. [conv]) — a prefix of ``keys``.
     ``probes`` carries ``by`` + ``on`` (same int-ns domain as the packed
-    timestamps). Matched columns come back as ``m_<col>``.
+    timestamps) and any other columns, which pass through. Output columns:
+    ``by``, ``on``, the other probe columns, ``m_<on>``, ``m_<v0>``,
+    ``m_<v1>``, ``status``.
     """
-    from tmframe_spark.codec.udfs import unpack_blocks
-    from tmframe_spark.ops.asof import AVAIL, IN_FUTURE, IN_PAST, asof_join
+    from tmframe_spark.codec.udfs import asof_in_blocks
+    from tmframe_spark.ops.asof import IN_PAST
 
-    pruned = blocks_for_asof(blocks, by, probes, on, strict=strict)
-    pts = unpack_blocks(pruned, keys, v0=v0, v1=v1, frame_col=frame_col)
-    if on != "ts_ns":
-        pts = pts.withColumnRenamed("ts_ns", on)
-    value_cols = [c for c in (v0, v1) if c]
-    out = asof_join(
-        probes,
-        # packed rollup points are unique per (series, ts), so the arrival
-        # tiebreaker is just a copy of the timestamp (asof_join needs it
-        # under a name distinct from `on`)
-        pts.withColumn("_pseq", F.col(on)),
-        on=on,
-        by=by,
-        seq="_pseq",
-        value_cols=value_cols,
+    missing = [c for c in by if c not in keys]
+    if missing:
+        raise ValueError(f"series keys {missing} are not block keys {keys}")
+    # a null series key matches no block; filtering both sides up front
+    # keeps the two consumers of the picks window on one identical
+    # exchange, which the planner then shares
+    keyed = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in by])
+    picks = _asof_picks(blocks.where(keyed), by, probes.where(keyed), on, strict)
+    pcols = [c for c in probes.columns if c not in by and c != on]
+    m_cols = [f"m_{c}" for c in (on, v0, v1) if c]
+    hits = (
+        picks.where(F.col("_pick").isNotNull())
+        .groupBy(*by, F.col("_pick").alias("ts_first"), "_latest")
+        .agg(F.collect_list(F.struct(on, *pcols)).alias("_probes"))
+    )
+    # the picked side is small: broadcast it so the decode runs in the
+    # block scan's own partitions, with no exchange before the pass
+    answered = asof_in_blocks(
+        blocks.join(F.broadcast(hits), [*by, "ts_first"]).select(
+            *by, frame_col, "_latest", "_probes"
+        ),
+        by,
+        on,
+        v0=v0,
+        v1=v1,
         tie=tie,
         strict=strict,
-        prefix="m_",
-    ).drop("status", "m__pseq")
-    # status from the FULL archive's zone maps, not the pruned subset
-    smax = blocks.groupBy(*by).agg(F.max("ts_last").alias("_series_max"))
-    return (
-        out.join(smax, by, "left")
-        .withColumn(
-            "status",
-            F.when(F.col(f"m_{on}").isNull(), F.lit(IN_PAST))
-            .when(F.col(on) > F.col("_series_max"), F.lit(IN_FUTURE))
-            .otherwise(F.lit(AVAIL)),
-        )
-        .drop("_series_max")
+        frame_col=frame_col,
     )
+    misses = (
+        picks.where(F.col("_pick").isNull())
+        .select(*probes.columns)
+        .unionByName(probes.where(~keyed))
+        .select(
+            *by,
+            on,
+            *pcols,
+            *[F.lit(None).cast(answered.schema[c].dataType).alias(c) for c in m_cols],
+            F.lit(IN_PAST).alias("status"),
+        )
+    )
+    return answered.unionByName(misses)
 
 
 def serve_range(
