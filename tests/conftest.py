@@ -9,7 +9,7 @@ SF_DIR = os.environ.get("TMFRAME_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from tmframe_spark.session import get_spark
 
-    s = get_spark(cores=8, shuffle_partitions=8, app_name="tmframe-tests")
+    s = get_spark(app_name="tmframe-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -78,10 +78,10 @@ def test_ten_year_conversation_pack_carry_bound(spark):
 
 def test_dense_conversation_routes_per_block_and_matches(spark):
     """A conversation above the ~400-data-rows-per-block routing threshold
-    (pack_conv's dense branch) must produce blocks byte-identical to the
-    compositional gap_fill -> pack_blocks path — the two branches share no
-    encoder code path (whole-array per-block vs segmented batch), so this
-    pins the router itself."""
+    (pack_many encodes its blocks one by one) must produce blocks
+    byte-identical to the compositional gap_fill -> pack_blocks path — the
+    two encoder routes share no code path (whole-array per-block vs
+    segmented batch), so this pins the router itself."""
     import pandas as pd
 
     # 3 days fully dense at 1m (1440 rows/day > 400 threshold) + 1 sparse
@@ -120,22 +120,37 @@ def _rows_dict(df):
     }
 
 
+def _node_names(plan):
+    """Node names of a JVM SparkPlan tree, the AQE wrapper unwrapped to the
+    whole plan before any stage runs."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _node_names(kids.apply(i))
+    ]
+
+
 def test_split_dense_pack_bytes_identical_with_empty_period(spark):
     """Round-4 verdict #3: the (conv, calendar-chunk) split pack must be
     byte-identical to the one-task-per-conv pack — including the
-    span-trimmed first/last blocks and the all-zero block of an EMPTY
-    calendar period inside the dense conv's span — while actually re-keying
-    the dense conversation's rows by calendar chunk (parallel pack)."""
+    span-trimmed first/last blocks and the all-zero blocks of EMPTY
+    calendar periods inside the dense conv's span, a run of several of
+    them owned by one chunk group — while actually re-keying the dense
+    conversation's rows by calendar chunk (parallel pack) in two Python
+    stages and no row-generating spine."""
     import pandas as pd
 
     rows = []
-    # hot conv: every other minute over Jan 1 (from 06:00), Jan 2, and
-    # Jan 4 (to 18:00) — Jan 3 is an empty interior day that still owes
-    # its all-zero block; odd minutes exercise in-block gap-fill
+    # hot conv: every other minute over Jan 1 (from 06:00), Jan 2, Jan 4
+    # and Jan 7 (to 18:00) — Jan 3 is an empty interior day and Jan 5-6 an
+    # empty run, each day still owing its all-zero block; odd minutes
+    # exercise in-block gap-fill
     for day, lo, hi in [
         ("2024-01-01", 6 * 60, 24 * 60),
         ("2024-01-02", 0, 24 * 60),
-        ("2024-01-04", 0, 18 * 60),
+        ("2024-01-04", 0, 24 * 60),
+        ("2024-01-07", 0, 18 * 60),
     ]:
         base = pd.Timestamp(day)
         for m in range(lo, hi, 2):
@@ -148,15 +163,26 @@ def test_split_dense_pack_bytes_identical_with_empty_period(spark):
     )
     single = _rows_dict(pack_rollup_blocks(rolled, "1m", "day"))
     split_df = pack_rollup_blocks(rolled, "1m", "day", split_dense_rows=1000)
-    plan = split_df._jdf.queryExecution().executedPlan().toString()
+    plan = split_df._jdf.queryExecution().executedPlan()
     # the dense branch really re-keys by (conv, calendar chunk)
-    assert "_chunk" in plan, plan
+    assert "_chunk" in plan.toString(), plan.toString()
+    # one Python pack stage per branch; empty chunks need no spine rows
+    names = _node_names(plan)
+    assert names.count("MapInPandas") == 2, plan.toString()
+    assert "Generate" not in names, plan.toString()
+    single_plan = pack_rollup_blocks(rolled, "1m", "day")._jdf.queryExecution()
+    assert _node_names(single_plan.executedPlan()).count("MapInPandas") == 1
     split = _rows_dict(split_df)
     assert set(split) == set(single)
     assert split == single
     # the empty Jan 3 interior day exists in both as a full-spine block
     jan3 = [k for k in single if k[0] == "hot" and str(k[1]).startswith("2024-01-03")]
     assert len(jan3) == 1 and single[jan3[0]][0] == 1440
+    run = [
+        k for k in single
+        if k[0] == "hot" and str(k[1])[:10] in ("2024-01-05", "2024-01-06")
+    ]
+    assert len(run) == 2 and all(single[k][0] == 1440 for k in run)
 
 
 def test_split_dense_pack_matches_at_month_unit(spark):

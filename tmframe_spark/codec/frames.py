@@ -226,6 +226,15 @@ def marshal_frames(frames: Frames) -> bytes:
     return out.tobytes()
 
 
+def marshal_each(frames: Frames) -> list[bytes]:
+    """Marshal a frame batch ONCE and slice the stream back into one wire
+    byte string per frame — the per-frame numpy ceremony of marshal_frames
+    is paid per batch, not per frame."""
+    wire = marshal_frames(frames)
+    ends = np.cumsum(frame_num_bytes(frames.prim, frames.ude)).tolist()
+    return [wire[s:e] for s, e in zip([0] + ends[:-1], ends)]
+
+
 def unmarshal_frames(buf: bytes) -> Frames:
     """Parse a wire byte-stream back into struct-of-arrays (frame.go:262-325).
 

@@ -225,10 +225,6 @@ def render_json(payload: bytes) -> str:
     return payload.decode("utf-8")
 
 
-def render_utf8(payload: bytes) -> str:
-    return payload.decode("utf-8")
-
-
 #: evtnum -> payload renderer, EXACTLY the cases the reference display path
 #: prints (display.go:41-76): EvMsgpack/EvMsgpKafka -> msgpack-to-JSON,
 #: EvJson -> verbatim. 2000..9999 are handled by range in render_payload
