@@ -9,9 +9,17 @@ always removed afterwards), the change from this checkout's working tree.
 Pair i runs both sides with seed ``--seed + i``, and the side that runs
 first alternates from pair to pair. Each run's result line is printed as it
 arrives; at the end, per end-to-end metric: each side's median and
-quartiles, the pairs the change won (ties count for neither), and whether a
+quartiles, the pairs the change won (ties count for neither), whether a
 gain may be claimed — at least nine tenths of at least ten pairs won, and
-the medians further apart than the parent's interquartile range.
+the medians further apart than the parent's interquartile range — and the
+regression verdict against the metric's relative ``bound``:
+
+- ``unresolved``: the parent's interquartile range exceeds ``bound`` times
+  its median, so a regression of that size could not be told from noise —
+  unless every change run is better than every parent run;
+- ``regressed``: the change median is worse than the parent median by more
+  than ``bound`` times the parent median;
+- ``held``: otherwise.
 """
 
 from __future__ import annotations
@@ -40,8 +48,8 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 def summarize(pairs: list[tuple[dict, dict]], spec: list[dict]) -> dict:
     """Per metric of ``spec`` (BENCHMARK.json's ``end_to_end`` entries):
     each side's quartiles, the change's wins over the pairs where both runs
-    report the metric, and whether the gain rule holds. ``pairs`` holds
-    (parent, change) metric dicts, name -> value."""
+    report the metric, whether the gain rule holds and the regression
+    verdict. ``pairs`` holds (parent, change) metric dicts, name -> value."""
     out = {}
     for m in spec:
         name, lower = m["name"], m["better"] == "lower"
@@ -52,6 +60,12 @@ def summarize(pairs: list[tuple[dict, dict]], spec: list[dict]) -> dict:
         pq, cq = quartiles(par), quartiles(chg)
         wins = sum((c < p) if lower else (c > p) for p, c in both)
         gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
+        bound = m["bound"] * abs(pq[1])
+        all_better = max(chg) < min(par) if lower else min(chg) > max(par)
+        if pq[2] - pq[0] > bound and not all_better:
+            regression = "unresolved"
+        else:
+            regression = "regressed" if -gap > bound else "held"
         out[name] = {
             "parent": pq,
             "change": cq,
@@ -60,6 +74,7 @@ def summarize(pairs: list[tuple[dict, dict]], spec: list[dict]) -> dict:
             "gain_holds": len(both) >= MIN_PAIRS
             and wins >= MIN_WIN_SHARE * len(both)
             and gap > pq[2] - pq[0],
+            "regression": regression,
         }
     return out
 
@@ -123,7 +138,8 @@ def main(argv: list[str] | None = None) -> int:
               f"{sum(not r.get('correct') for r in runs)} incorrect runs")
     for name, s in summary.items():
         print(f"{args.workload} {name}: parent {_fmt(s['parent'])}; change {_fmt(s['change'])}; "
-              f"change won {s['wins']}/{s['pairs']}; gain holds: {s['gain_holds']}")
+              f"change won {s['wins']}/{s['pairs']}; gain holds: {s['gain_holds']}; "
+              f"regression: {s['regression']}")
     print(json.dumps({"workload": args.workload, "base": args.base, "summary": summary}))
     return 0
 

@@ -1,4 +1,5 @@
-"""The gain rule of scripts/ab_pairs.py, on hand-made pair results (no Spark)."""
+"""The gain rule and the regression verdict of scripts/ab_pairs.py, on
+hand-made pair results (no Spark)."""
 
 import importlib.util
 import os
@@ -11,8 +12,8 @@ ab_pairs = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(ab_pairs)
 
 SPEC = [
-    {"name": "rss", "better": "lower"},
-    {"name": "rate", "better": "higher"},
+    {"name": "rss", "better": "lower", "bound": 0.25},
+    {"name": "rate", "better": "higher", "bound": 0.25},
 ]
 
 
@@ -50,3 +51,42 @@ def test_higher_is_better_metrics_and_missing_values():
     assert (s["rate"]["wins"], s["rate"]["pairs"]) == (10, 10)
     assert s["rate"]["gain_holds"]
     assert ab_pairs.quartiles([3.0]) == (3.0, 3.0, 3.0)
+
+
+def _verdict(parent, change, name):
+    return ab_pairs.summarize(_pairs(parent, change, name), SPEC)[name]["regression"]
+
+
+# parent runs with a tight spread: IQR 2 around a median of 100
+TIGHT = [99, 100, 101, 100, 98, 102, 100, 99, 101, 100]
+
+
+def test_regression_held_within_the_bound_in_both_directions():
+    # 20 % worse is inside the 25 % bound; better is always held
+    assert _verdict(TIGHT, [120] * 10, "rss") == "held"
+    assert _verdict(TIGHT, [80] * 10, "rate") == "held"
+    assert _verdict(TIGHT, [50] * 10, "rss") == "held"
+    assert _verdict(TIGHT, [150] * 10, "rate") == "held"
+
+
+def test_regression_regressed_past_the_bound_in_both_directions():
+    # lower is better: the change median 130 is 30 % above the parent's 100
+    assert _verdict(TIGHT, [130] * 10, "rss") == "regressed"
+    # higher is better: the change median 70 is 30 % below the parent's 100
+    assert _verdict(TIGHT, [70] * 10, "rate") == "regressed"
+
+
+def test_regression_unresolved_when_the_parent_spread_exceeds_the_bound():
+    # parent IQR 60 around a median of 100 (0.6 > 0.25): even a 40 % worse
+    # change median, or an unchanged one, cannot be called either way
+    wide = [40, 70, 100, 130, 160, 40, 70, 100, 130, 160]
+    assert _verdict(wide, [140] * 10, "rss") == "unresolved"
+    assert _verdict(wide, [100] * 10, "rss") == "unresolved"
+    assert _verdict(wide, [60] * 10, "rate") == "unresolved"
+    assert _verdict(wide, [100] * 10, "rate") == "unresolved"
+    # ... unless every change run beats every parent run
+    assert _verdict(wide, [39] * 10, "rss") == "held"
+    assert _verdict(wide, [161] * 10, "rate") == "held"
+    # one change run no better than the best parent run leaves it unresolved
+    assert _verdict(wide, [39] * 9 + [40], "rss") == "unresolved"
+    assert _verdict(wide, [161] * 9 + [160], "rate") == "unresolved"

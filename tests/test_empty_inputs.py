@@ -137,8 +137,6 @@ def test_empty_inputs_round5_operators(spark):
     assert r5.count() == 0
     assert gap_fill(r5, "5m").count() == 0
     assert pack_rollup_blocks(r5, "5m", "day").count() == 0
-    # split path on an empty rollup: no spans, no chunks, no blocks
-    assert pack_rollup_blocks(r5, "5m", "day", split_dense_rows=10).count() == 0
     # clustering + canonical keep + pre-check
     empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup_clusters(empty_pairs).count() == 0

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 from tmframe_spark.codec.udfs import pack_blocks, pack_rollup_blocks
 from tmframe_spark.data.transcripts import load_transcripts
-from tmframe_spark.ops.rollup import cascade_up, gap_fill, rollup, with_ts_ns
+from tmframe_spark.ops.rollup import AGG_COLS, cascade_up, gap_fill, rollup, with_ts_ns
 
 
 def blocks_dict(df, grp_col):
@@ -18,7 +18,9 @@ def blocks_dict(df, grp_col):
 
 
 def compositional(tier_df, tier, unit):
-    g = gap_fill(tier_df, tier)
+    # gap_fill carries every aggregate column; the pack reads two of them
+    missing = [c for c in AGG_COLS if c not in tier_df.columns]
+    g = gap_fill(tier_df.select("*", *[F.lit(0).alias(c) for c in missing]), tier)
     pts = g.select(
         "conv_id",
         F.date_trunc(unit, "bucket").alias("grp"),
@@ -131,14 +133,11 @@ def _node_names(plan):
     ]
 
 
-def test_split_dense_pack_bytes_identical_with_empty_period(spark):
-    """Round-4 verdict #3: the (conv, calendar-chunk) split pack must be
-    byte-identical to the one-task-per-conv pack — including the
-    span-trimmed first/last blocks and the all-zero blocks of EMPTY
-    calendar periods inside the dense conv's span, a run of several of
-    them owned by one chunk group — while actually re-keying the dense
-    conversation's rows by calendar chunk (parallel pack) in two Python
-    stages and no row-generating spine."""
+def test_pack_bytes_match_compositional_with_empty_periods(spark):
+    """The one-pass pack must be byte-identical to gap_fill -> pack_blocks
+    — including the span-trimmed first/last blocks and the all-zero blocks
+    of EMPTY calendar periods inside a dense conv's span, alone and in a
+    run — in one Python stage, whatever ``split_dense_rows`` says."""
     import pandas as pd
 
     rows = []
@@ -161,20 +160,18 @@ def test_split_dense_pack_bytes_identical_with_empty_period(spark):
     rolled = spark.createDataFrame(
         rows, "conv_id string, bucket timestamp, turns long, token_volume long"
     )
-    single = _rows_dict(pack_rollup_blocks(rolled, "1m", "day"))
-    split_df = pack_rollup_blocks(rolled, "1m", "day", split_dense_rows=1000)
-    plan = split_df._jdf.queryExecution().executedPlan()
-    # the dense branch really re-keys by (conv, calendar chunk)
-    assert "_chunk" in plan.toString(), plan.toString()
-    # one Python pack stage per branch; empty chunks need no spine rows
-    names = _node_names(plan)
-    assert names.count("MapInPandas") == 2, plan.toString()
-    assert "Generate" not in names, plan.toString()
-    single_plan = pack_rollup_blocks(rolled, "1m", "day")._jdf.queryExecution()
-    assert _node_names(single_plan.executedPlan()).count("MapInPandas") == 1
-    split = _rows_dict(split_df)
-    assert set(split) == set(single)
-    assert split == single
+    packs = [
+        pack_rollup_blocks(rolled, "1m", "day"),
+        pack_rollup_blocks(rolled, "1m", "day", split_dense_rows=1000),
+    ]
+    for df in packs:
+        # one plan: one Python pack stage, no calendar-chunk re-keying
+        plan = df._jdf.queryExecution().executedPlan()
+        assert _node_names(plan).count("MapInPandas") == 1, plan.toString()
+        assert "_chunk" not in plan.toString(), plan.toString()
+    single, keyword = (_rows_dict(df) for df in packs)
+    assert keyword == single
+    assert _rows_dict(compositional(rolled, "1m", "day")) == single
     # the empty Jan 3 interior day exists in both as a full-spine block
     jan3 = [k for k in single if k[0] == "hot" and str(k[1]).startswith("2024-01-03")]
     assert len(jan3) == 1 and single[jan3[0]][0] == 1440
@@ -185,9 +182,9 @@ def test_split_dense_pack_bytes_identical_with_empty_period(spark):
     assert len(run) == 2 and all(single[k][0] == 1440 for k in run)
 
 
-def test_split_dense_pack_matches_at_month_unit(spark):
+def test_pack_matches_compositional_at_month_unit(spark):
     # calendar-unit generality: hourly tier grouped by month, with an empty
-    # interior month; threshold routes the single conv through the split
+    # interior month
     import pandas as pd
 
     hours = list(pd.date_range("2024-02-01", "2024-02-28 23:00", freq="h")) + list(
@@ -198,10 +195,8 @@ def test_split_dense_pack_matches_at_month_unit(spark):
         rows, "conv_id string, bucket timestamp, turns long, token_volume long"
     )
     single = _rows_dict(pack_rollup_blocks(rolled, "1h", "month"))
-    split = _rows_dict(
-        pack_rollup_blocks(rolled, "1h", "month", split_dense_rows=500)
-    )
-    assert split == single and len(single) == 3  # Feb, Mar (empty), Apr
+    comp = _rows_dict(compositional(rolled, "1h", "month"))
+    assert comp == single and len(single) == 3  # Feb, Mar (empty), Apr
 
 
 def test_fused_equals_compositional_custom_5m_tier(spark):
@@ -240,8 +235,8 @@ def test_pack_rejects_non_utc_session(spark):
 def test_pack_carry_spanning_many_arrow_batches_bytes_identical(spark):
     """A conversation that spans many Arrow batches is buffered piecewise
     and concatenated once when a batch closes it (or at end of stream) —
-    the blocks must be byte-identical to the one-batch pack, on the fused,
-    compositional and split-dense paths alike."""
+    the blocks must be byte-identical to the one-batch pack, on the fused
+    and compositional paths alike."""
     import pandas as pd
 
     rows = []
@@ -265,13 +260,9 @@ def test_pack_carry_spanning_many_arrow_batches_bytes_identical(spark):
     try:
         spark.conf.set(key, "64")
         fused = _rows_dict(pack_rollup_blocks(rolled, "1m", "day"))
-        split = _rows_dict(
-            pack_rollup_blocks(rolled, "1m", "day", split_dense_rows=1000)
-        )
         comp = blocks_dict(compositional(rolled, "1m", "day"), "grp")
     finally:
         spark.conf.set(key, old)
     assert sum(1 for c, _ in ref if c == "conv-long") == 3
     assert fused == ref
-    assert split == ref
     assert comp == {k: (v[4], v[0]) for k, v in ref.items()}

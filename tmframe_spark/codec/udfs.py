@@ -12,7 +12,7 @@ function of the group's row set, never of Spark partitioning or arrival
 order. Verified in tests by encoding after arbitrary repartition() and
 comparing against the single-node numpy oracle byte-for-byte.
 
-All UDFs are Arrow-batched (applyInPandas / mapInPandas); no per-row Python.
+All UDFs are Arrow-batched mapInPandas stages; no per-row Python.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from tmframe_spark.codec.frames import (
     marshal_each,
     unmarshal_frames,
 )
+from tmframe_spark.ops.rollup import tier_step_seconds
 
 
 def _closed_groups(
@@ -191,8 +192,6 @@ def pack_blocks(
     return part.mapInPandas(fn, out_schema)
 
 
-#: tier -> bucket step in nanoseconds
-TIER_STEP_NS = {"1m": 60_000_000_000, "1h": 3_600_000_000_000, "1d": 86_400_000_000_000}
 #: block group unit per tier -> numpy datetime64 trunc code
 GROUP_UNIT_CODE = {"day": "D", "month": "M", "year": "Y"}
 
@@ -202,10 +201,6 @@ def tier_step_ns(tier: str) -> int:
     '30s', ... — ops/rollup._custom_tier enforces the divides-one-day rule,
     which is exactly what keeps day/month/year block group boundaries
     step-aligned here)."""
-    if tier in TIER_STEP_NS:
-        return TIER_STEP_NS[tier]
-    from tmframe_spark.ops.rollup import tier_step_seconds
-
     return tier_step_seconds(tier) * 1_000_000_000
 
 
@@ -231,41 +226,25 @@ def pack_rollup_blocks(
     ever exists as a numpy array inside one executor task, bounded by the
     conv's retention window.
 
-    Skew note: by default one conversation packs in one task (blocks need
+    Skew note: one conversation packs in one task (blocks need
     the conv's global [first, last] span), so the hot conversation is the
     stage's potential straggler — but its cost is CALENDAR-bounded, not
     data-bounded: a fully dense conv-year at 1m is 525k spine points,
     ≈1.2 s of dense encode + marshal on one core (3,650 dense day blocks
     measured at 11.8 s), so a decade-long always-active conversation
     costs ~12 s serial in one task (coarser tiers proportionally less).
+    Packing that conversation's calendar chunks in parallel, behind a
+    checkpoint, a span aggregate and a second shuffle, did not beat this
+    one pass at local[4] (10-year dense 1m conversation + 31 small ones,
+    pack stage only, medians one-pass vs split: 10.65 vs 13.56 s over 5
+    runs, 17.54 vs 17.54 s over 7), so there is one plan.
 
-    ``split_dense_rows`` enables the finer (conv, calendar-chunk) pack for
-    deployments where that straggler matters: conversations holding MORE
-    than this many rollup rows are re-keyed by (conv, calendar chunk that
-    holds data), so the hot conversation's blocks pack in parallel — one
-    task per chunk — while every other conversation keeps the one-pass
-    path. Both go through the same packer and block plan; the byte output
-    is UNCHANGED (asserted in tests) because block boundaries are already
-    calendar-aligned. A chunk group only needs its spine's origin and end:
-    the origin is the conv's global first point, from a skew-safe
-    pre-aggregation (map-side-combined min/max/count per conv); the end is
-    one step before the conv's next data chunk (a lead over its distinct
-    chunks), or the conv's last point. Both ride in one per-(conv, chunk)
-    table broadcast onto the rows — dense convs are by definition few
-    (straggler conversations), so it is small. So each chunk group also
-    packs the all-zero blocks of the empty calendar periods that follow it.
-    Cost: one extra aggregation pass over the rollup + a second
-    (dense-rows-only) shuffle — pay it when the straggler dominates, not by
-    default. Measured at local[4] (4 vCPU), pack stage only, a 10-year
-    dense 1m conversation plus 31 small ones (scripts/split_probe.py):
-    14.5 s one-pass vs 11.2 s split, identical bytes.
+    ``split_dense_rows`` is accepted and ignored: ``bench.py`` passes it.
     """
     # the wire contract is UTC end to end: bucket_ts_ns casts through the
-    # SESSION timezone while the block/group arithmetic (numpy datetime64,
-    # and the split path's chunk date_trunc) is UTC — a non-UTC session
-    # would silently skew epochs against calendar boundaries (and in the
-    # split path scatter block-local indices out of range), so fail loudly
-    # instead (round-5 review finding #2)
+    # SESSION timezone while the block/group arithmetic (numpy datetime64)
+    # is UTC — a non-UTC session would silently skew epochs against
+    # calendar boundaries, so fail loudly instead (round-5 review finding #2)
     tz = rolled.sparkSession.conf.get("spark.sql.session.timeZone")
     if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
         raise ValueError(
@@ -310,21 +289,20 @@ def pack_rollup_blocks(
             g.astype(f"datetime64[{unit}]").astype("datetime64[ns]").astype(np.int64)
         )
 
-    def pack_many(conv, ts, a0, a1, cstarts, cends, t0=None, hi=None) -> pd.DataFrame:
+    def pack_many(conv, ts, a0, a1, cstarts, cends) -> pd.DataFrame:
         """ALL closed groups of one Arrow batch under ONE block plan (r7):
         the per-group numpy ceremony WAS the pack stage at rehearsal scale
         (measured: 1,500 convs x ~1.8 ms/conv = 2.4 s serial).
 
-        A group's spine runs from ``t0`` (its origin) to ``hi`` (its last
-        spine timestamp), both defaulting to the group's first and last data
-        row — one conversation, packed whole. Its blocks are the calendar
-        groups from its first data row's to ``hi``'s: the first starts at
-        ``t0`` or its calendar start, whichever is later, the last ends at
-        ``hi``. Block extents and each row's (block, block-local slot) are
-        computed arithmetically for all groups at once. Encoder choice per
-        group: above 400 data rows per block (e.g. the hot conversation at
-        fine tiers) each block encodes alone with the whole-array
-        encoder, which beats the keyed-segmented pass there (measured
+        A group is one conversation, packed whole: its spine runs from its
+        first data row ``t0`` to its last ``hi``, and its blocks are the
+        calendar groups between them — the first starts at ``t0``, the last
+        ends at ``hi``, and every empty calendar group between them packs
+        its all-zero block. Block extents and each row's (block, block-local
+        slot) are computed arithmetically for all groups at once. Encoder
+        choice per group: above 400 data rows per block (e.g. the hot
+        conversation at fine tiers) each block encodes alone with the
+        whole-array encoder, which beats the keyed-segmented pass there (measured
         crossover ~400); every other block goes through ONE
         encode_blocks_gapfilled_batch call (per-block independent: its only
         sequential piece, the Gorilla window scan, resets at every block
@@ -333,13 +311,10 @@ def pack_rollup_blocks(
 
         conv: per-row group conv ids (only rows < cstarts[-1] used);
         ts/a0/a1: CLOSED rows only; cstarts/cends: row ranges of the closed
-        groups; t0/hi: per-group int64 arrays, or None."""
+        groups."""
         counts = cends - cstarts
-        if t0 is None:
-            t0 = ts[cstarts]
-        if hi is None:
-            hi = ts[cends - 1]
-        g_first = group_of(ts[cstarts])
+        t0, hi = ts[cstarts], ts[cends - 1]
+        g_first = group_of(t0)
         nb_c = group_of(hi) - g_first + 1
         C, B = len(counts), int(nb_c.sum())
         blk_cum = np.cumsum(nb_c)
@@ -404,15 +379,11 @@ def pack_rollup_blocks(
         )
 
     def group_starts(pdf: pd.DataFrame) -> np.ndarray:
-        # a group is one conversation — on the split path's dense branch,
-        # one (conversation, data chunk)
+        # a group is one conversation
         conv = pdf["conv_id"].to_numpy()
         change = np.empty(len(conv), dtype=bool)
         change[0] = True
         np.not_equal(conv[1:], conv[:-1], out=change[1:])
-        if "_chunk" in pdf:
-            chk = pdf["_chunk"].to_numpy(np.int64)
-            change[1:] |= chk[1:] != chk[:-1]
         return np.flatnonzero(change)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -424,7 +395,6 @@ def pack_rollup_blocks(
         # many-batch conversation tests in tests/test_pack_fused.py.
         for pdf, starts, ends in _closed_groups(batches, group_starts):
             ncl = int(ends[-1])  # closed rows: the open group's rows follow
-            split = "_hi" in pdf  # split path: per-group spine origin + end
             yield pack_many(
                 pdf["conv_id"].to_numpy(),
                 pdf["_ts"].to_numpy(np.int64)[:ncl],
@@ -432,8 +402,6 @@ def pack_rollup_blocks(
                 pdf["_v1"].to_numpy(np.int64)[:ncl],
                 starts,
                 ends,
-                pdf["_t0"].to_numpy(np.int64)[starts] if split else None,
-                pdf["_hi"].to_numpy(np.int64)[starts] if split else None,
             )
 
     # explicit partition count — see pack_blocks: the pack cost is Python
@@ -443,68 +411,10 @@ def pack_rollup_blocks(
     # pure per-task Python-worker overhead.
     from tmframe_spark.ops.sizing import cpu_stage_partitions
 
-    n_part = int(rolled.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if split_dense_rows is None:
-        part = pts.repartition(
-            cpu_stage_partitions(pts), F.col("conv_id")
-        ).sortWithinPartitions("conv_id", "_ts")
-        return part.mapInPandas(fn, out_schema)
-
-    # ---- (conv, calendar-chunk) split path (round-4 verdict #3) ---------
-    from pyspark.sql import Window
-
-    unit_name = {"D": "day", "M": "month", "Y": "year"}[unit]
-    # the split plan reads pts four times (span agg, sparse anti-join,
-    # chunk table, dense join) — materialize it once (eager localCheckpoint: reuse +
-    # auto release, the repo rule) instead of recomputing the rollup
-    # lineage per branch (measured 2.2x soak regression without this)
-    pts = pts.localCheckpoint(eager=True)
-    # skew-safe per-conv span: map-side-combined min/max/count, then the
-    # (small — dense convs are by definition the few stragglers) span table
-    # broadcasts to route rows without an extra data-sized shuffle
-    spans = pts.groupBy("conv_id").agg(
-        F.min("_ts").alias("_t0"),
-        F.max("_ts").alias("_tl"),
-        F.count(F.lit(1)).alias("_cnt"),
-    )
-    dense = spans.where(F.col("_cnt") > split_dense_rows).drop("_cnt")
-    sparse_blocks = (
-        pts.join(F.broadcast(dense.select("conv_id")), "conv_id", "left_anti")
-        .repartition(n_part, F.col("conv_id"))
-        .sortWithinPartitions("conv_id", "_ts")
-        .mapInPandas(fn, out_schema)
-    )
-
-    chunk_of = F.expr(
-        f"unix_micros(date_trunc('{unit_name}', timestamp_micros(_ts div 1000))) * 1000"
-    )
-    chunked = pts.withColumn("_chunk", chunk_of)
-    # each data chunk's group also owns the empty chunks that follow it: its
-    # spine ends one step before the conv's next data chunk (or at the conv's
-    # last point), so an empty calendar period's all-zero block is packed by
-    # the group before it. The distinct-chunk table is calendar-bounded per
-    # dense conv, small enough to broadcast onto the rows in one join.
-    next_chunk = F.lead("_chunk").over(
-        Window.partitionBy("conv_id").orderBy("_chunk")
-    )
-    chunks = (
-        chunked.join(F.broadcast(dense), "conv_id")
-        .select("conv_id", "_chunk", "_t0", "_tl")
-        .distinct()
-        .select(
-            "conv_id",
-            "_chunk",
-            "_t0",
-            F.coalesce(next_chunk - step, "_tl").alias("_hi"),
-        )
-    )
-    dense_blocks = (
-        chunked.join(F.broadcast(chunks), ["conv_id", "_chunk"])
-        .repartition(n_part, "conv_id", "_chunk")
-        .sortWithinPartitions("conv_id", "_chunk", "_ts")
-        .mapInPandas(fn, out_schema)
-    )
-    return sparse_blocks.unionByName(dense_blocks)
+    part = pts.repartition(
+        cpu_stage_partitions(pts), F.col("conv_id")
+    ).sortWithinPartitions("conv_id", "_ts")
+    return part.mapInPandas(fn, out_schema)
 
 
 def _block_payloads(frames: pd.Series, evtnum: int = EV_BLOCK) -> list:

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TIER_WINDOW = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+from tmframe_spark.ops.rollup import tier_step_seconds
 
 
 def tier_window(tier: str) -> str:
@@ -29,11 +29,7 @@ def tier_window(tier: str) -> str:
     Spark's tumbling windows align to the epoch, which for day-dividing
     steps equals the batch side's epoch-µs floor (ops/rollup.tier_bucket)
     — streamed buckets match batch buckets exactly."""
-    if tier in TIER_WINDOW:
-        return TIER_WINDOW[tier]
-    from tmframe_spark.ops.rollup import _custom_tier
-
-    return f"{_custom_tier(tier)[2]} seconds"
+    return f"{tier_step_seconds(tier)} seconds"
 
 
 def read_transcript_stream(
@@ -182,19 +178,6 @@ def stream_count_window_dedup(
     return keyed.groupBy("conv_id").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-
-
-def run_available_now(stream_df: DataFrame, checkpoint: str, out_path: str) -> None:
-    """Drain everything currently available (batch-style streaming run)."""
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint)
-        .option("path", out_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_topk_counts(
