@@ -336,3 +336,23 @@ def test_serve_asof_plan_answers_inside_the_decode(spark):
     bad = [a for a in ancestors if any(w in a for w in ("Window", "Exchange", "Aggregate"))]
     assert not bad, plan.toString()
     assert "Window" in [n.nodeName() for n, _ in _walk(node)], plan.toString()
+
+
+def test_blocks_for_asof_plan_has_no_aggregate(spark):
+    """The block picker is the as-of union-merge with no reduce step: block
+    starts are unique per series, so its optimized plan holds a Window and
+    no Aggregate (a reduce would add an aggregate and an exchange)."""
+    from tmframe_spark.ops.serve import blocks_for_asof
+
+    blocks = spark.createDataFrame(
+        [("a", "d1", 1000, 3000, b"x"), ("a", "d2", 5000, 6000, b"y")],
+        "conv_id string, day string, ts_first long, ts_last long, frame binary",
+    )
+    probes = spark.createDataFrame([("a", 4000), ("b", 10)], "conv_id string, ts_ns long")
+    for strict in (False, True):
+        plan = blocks_for_asof(
+            blocks, ["conv_id"], probes, "ts_ns", strict=strict
+        )._jdf.queryExecution().optimizedPlan()
+        names = [n.nodeName() for n, _ in _walk(plan)]
+        assert "Window" in names, plan.toString()
+        assert "Aggregate" not in names, plan.toString()

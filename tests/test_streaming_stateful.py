@@ -166,6 +166,42 @@ def test_stream_ewma_state_across_microbatches(spark):
     assert got[half] != (len(texts[half]) << 3)
 
 
+def test_stream_ewma_fails_closed_outside_declared_domain(spark):
+    """stream_ewma shares ewma's declared domain |value| < 2^(62-k): at k=3
+    a value of 2^59 fails the query with the batch op's error instead of
+    emitting a wrapped Q3 state."""
+    import pytest
+
+    from tmframe_spark.streaming.stream import stream_ewma
+
+    rows = pd.DataFrame(
+        {
+            "conv_id": "c0",
+            "turn_idx": [0, 1],
+            "role": "user",
+            "text": ["a", "b"],
+            "tool": pd.Series([None, None], dtype="string"),
+            "ts": pd.to_datetime(["2024-01-01 00:00:00", "2024-01-01 00:00:01"]),
+            "big": pd.Series([1, 1 << 59], dtype="int64"),
+        }
+    )
+    rows["ts"] = rows["ts"].astype("datetime64[us]")
+    src = tempfile.mkdtemp(prefix="tmframe_sewma_dom_")
+    rows.to_parquet(os.path.join(src, "a.parquet"))
+
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = (
+        stream_ewma(stream, k=3, value_col="big")
+        .writeStream.format("memory")
+        .queryName("sewma_dom")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match=r"must be < 2\^59 at k=3"):
+        q.awaitTermination(300)
+
+
 def _tier_files(values, prefix, split_at):
     """One conversation's (conv_id, bucket, turns) tier rows as two parquet
     files (two micro-batches with maxFilesPerTrigger=1)."""

@@ -943,8 +943,8 @@ def peek_block_n_points(frame: bytes) -> int:
     """Point count of a marshalled EV_BLOCK frame from its fixed-offset
     header alone (UDE payload starts at wire offset 16; the block header is
     magic(2) + version(1) + flags(1) + count(u32 LE)) — no bitstream
-    decode. Lets unpack_blocks keep its output-memory bound even when the
-    caller projected away the n_points column."""
+    decode. Lets unpack_blocks bound its output memory from the frames
+    alone, whichever columns the caller kept."""
     if len(frame) < 24:
         raise ValueError("frame too short for an EV_BLOCK header")
     if frame[16:18] != BLOCK_MAGIC:

@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
+    IntegerType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -35,6 +38,7 @@ from tmframe_spark.codec.blocks import (
     encode_block,
     encode_block_gapfilled,
     encode_blocks_gapfilled_batch,
+    peek_block_n_points,
 )
 from tmframe_spark.codec.frames import (
     EV_BLOCK,
@@ -429,12 +433,29 @@ def _block_payloads(frames: pd.Series, evtnum: int = EV_BLOCK) -> list:
     return fr.data
 
 
+def _value_fields(v0: str | None, v1: str | None) -> list[StructField]:
+    """Output fields of the decoded value streams that are kept."""
+    return [StructField(c, t) for c, t in ((v0, DoubleType()), (v1, LongType())) if c]
+
+
+def _decoded_blocks(frames: pd.Series) -> Iterator[tuple]:
+    """Per EV_BLOCK frame of ``frames``, its decoded ``(ts, v0, v1)``
+    arrays; a block without a value stream reads NaN for v0 and 0 for v1
+    at every point."""
+    for payload in _block_payloads(frames):
+        ts, a0, a1 = decode_block(payload)
+        yield (
+            ts,
+            a0 if a0 is not None else np.full(len(ts), np.nan),
+            a1 if a1 is not None else np.zeros(len(ts), np.int64),
+        )
+
+
 def unpack_blocks(
     blocks: DataFrame,
     keys: list[str],
     v0: str | None = "v0",
     v1: str | None = "v1",
-    frame_col: str = "frame",
 ) -> DataFrame:
     """Explode framed blocks back into point rows (keys..., ts_ns [, v0][, v1]).
 
@@ -443,19 +464,15 @@ def unpack_blocks(
     maxRecordsPerBatch block rows, and a naive one-frame-per-batch yield
     would materialize batch-rows x points-per-block rows at once (measured:
     a whole-archive decode at 580k blocks x ~1.4k pts killed workers).
-    The fn therefore splits each input batch on the cumulative ``n_points``
-    column so every yielded frame holds at most ~2M decoded points, and
-    assembles each slice with one ``np.concatenate`` per column instead of
-    one pandas DataFrame per block.
+    The fn therefore splits each input batch on the cumulative point count
+    read from each frame's block header (``peek_block_n_points``, no
+    bitstream decode, whichever columns the caller kept) so every yielded
+    frame holds at most ~2M decoded points, and assembles each slice with
+    one ``np.concatenate`` per column instead of one pandas DataFrame per
+    block.
     """
     fields = _key_fields(blocks, keys) + [StructField("ts_ns", LongType())]
-    from pyspark.sql.types import DoubleType
-
-    if v0:
-        fields.append(StructField(v0, DoubleType()))
-    if v1:
-        fields.append(StructField(v1, LongType()))
-    out_schema = StructType(fields)
+    out_schema = StructType(fields + _value_fields(v0, v1))
 
     PTS_BUDGET = 2_000_000  # max decoded points per yielded frame
 
@@ -464,23 +481,9 @@ def unpack_blocks(
             n = len(pdf)
             if n == 0:
                 continue
-            if "n_points" in pdf.columns:
-                csum = pdf["n_points"].to_numpy(np.int64).cumsum()
-            else:
-                # projected input without the n_points stat: recover the
-                # per-block point counts from the frames themselves — each
-                # block payload header carries n (decode_block reads it) —
-                # via a cheap header peek, so the memory bound NEVER
-                # degrades to rows-only (2048 giant blocks would rebuild
-                # exactly the blowup this function guards against)
-                from tmframe_spark.codec.blocks import peek_block_n_points
-
-                counts = np.fromiter(
-                    (peek_block_n_points(bytes(x)) for x in pdf[frame_col]),
-                    dtype=np.int64,
-                    count=n,
-                )
-                csum = counts.cumsum()
+            csum = np.fromiter(
+                (peek_block_n_points(x) for x in pdf["frame"]), np.int64, n
+            ).cumsum()
             start = 0
             while start < n:
                 base = int(csum[start - 1]) if start else 0
@@ -488,26 +491,12 @@ def unpack_blocks(
                 end = min(max(end, start + 1), n)  # an oversize block rides alone
                 sl = pdf.iloc[start:end]
                 start = end
-                key_cols = {k: sl[k].to_numpy() for k in keys}
-                ts_l, v0_l, v1_l, reps = [], [], [], []
-                for payload in _block_payloads(sl[frame_col]):
-                    ts, a0, a1 = decode_block(payload)
-                    ts_l.append(ts)
-                    reps.append(len(ts))
-                    if v0:
-                        v0_l.append(
-                            a0 if a0 is not None else np.full(len(ts), np.nan)
-                        )
-                    if v1:
-                        v1_l.append(
-                            a1 if a1 is not None else np.zeros(len(ts), np.int64)
-                        )
-                d = {k: np.repeat(key_cols[k], reps) for k in keys}
-                d["ts_ns"] = np.concatenate(ts_l) if ts_l else np.array([], np.int64)
-                if v0:
-                    d[v0] = np.concatenate(v0_l)
-                if v1:
-                    d[v1] = np.concatenate(v1_l)
+                ts_l, v0_l, v1_l = zip(*_decoded_blocks(sl["frame"]))
+                reps = [len(ts) for ts in ts_l]
+                d = {k: np.repeat(sl[k].to_numpy(), reps) for k in keys}
+                for c, parts in (("ts_ns", ts_l), (v0, v0_l), (v1, v1_l)):
+                    if c:
+                        d[c] = np.concatenate(parts)
                 yield pd.DataFrame(d)
 
     return blocks.mapInPandas(fn, out_schema)
@@ -521,11 +510,10 @@ def asof_in_blocks(
     v1: str | None = "v1",
     tie: str = "last",
     strict: bool = False,
-    frame_col: str = "frame",
 ) -> DataFrame:
     """Answer as-of probes inside the decode of the one block that holds them.
 
-    Input: one row per block — ``by`` columns, ``frame_col``, ``_probes``
+    Input: one row per block — ``by`` columns, ``frame``, ``_probes``
     (array of struct(``on``, probe columns...): the probes whose answer lies
     in this block) and ``_latest`` (the block starts its series' latest
     block). Output: one row per probe — ``by``, ``on``, the probe columns,
@@ -540,24 +528,19 @@ def asof_in_blocks(
     of a ``_latest`` block, else Avail. Missing value streams fill like
     ``unpack_blocks``: NaN for v0, 0 for v1.
     """
-    from pyspark.sql.types import DoubleType, StringType
-
     from tmframe_spark.ops.asof import AVAIL, IN_FUTURE
 
     if tie not in ("first", "last"):
         raise ValueError("tie must be 'first' or 'last'")
     probe_type = blocks.schema["_probes"].dataType.elementType
     probe_cols = probe_type.fieldNames()
-    fields = (
+    out_schema = StructType(
         _key_fields(blocks, by)
         + list(probe_type.fields)
         + [StructField(f"m_{on}", LongType())]
+        + _value_fields(v0 and f"m_{v0}", v1 and f"m_{v1}")
+        + [StructField("status", StringType())]
     )
-    if v0:
-        fields.append(StructField(f"m_{v0}", DoubleType()))
-    if v1:
-        fields.append(StructField(f"m_{v1}", LongType()))
-    out_schema = StructType(fields + [StructField("status", StringType())])
     side = "left" if strict else "right"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -572,10 +555,9 @@ def asof_in_blocks(
             q_all = probes[on].to_numpy(np.int64)
             ends = counts.cumsum().tolist()
             m_ts, m_a0, m_a1, status = [], [], [], []
-            for payload, latest, lo, hi in zip(
-                _block_payloads(pdf[frame_col]), pdf["_latest"], [0] + ends, ends
+            for (ts, a0, a1), latest, lo, hi in zip(
+                _decoded_blocks(pdf["frame"]), pdf["_latest"], [0] + ends, ends
             ):
-                ts, a0, a1 = decode_block(payload)
                 q = q_all[lo:hi]
                 j = np.searchsorted(ts, q, side) - 1
                 if (j < 0).any():
@@ -584,18 +566,16 @@ def asof_in_blocks(
                 if tie == "first":
                     j = np.searchsorted(ts, ts[j], "left")
                 m_ts.append(ts[j])
-                m_a0.append(a0[j] if a0 is not None else np.full(len(j), np.nan))
-                m_a1.append(a1[j] if a1 is not None else np.zeros(len(j), np.int64))
+                m_a0.append(a0[j])
+                m_a1.append(a1[j])
                 status.append(
                     np.where(bool(latest) & (q > ts[-1]), IN_FUTURE, AVAIL)
                 )
             out = {b: np.repeat(pdf[b].to_numpy(), counts) for b in by}
             out.update((c, probes[c]) for c in probe_cols)
-            out[f"m_{on}"] = np.concatenate(m_ts)
-            if v0:
-                out[f"m_{v0}"] = np.concatenate(m_a0)
-            if v1:
-                out[f"m_{v1}"] = np.concatenate(m_a1)
+            for c, parts in ((on, m_ts), (v0, m_a0), (v1, m_a1)):
+                if c:
+                    out[f"m_{c}"] = np.concatenate(parts)
             out["status"] = np.concatenate(status)
             yield pd.DataFrame(out)
 
@@ -728,11 +708,9 @@ def frame_msgpack_turns(transcripts: DataFrame) -> DataFrame:
     return src.mapInPandas(fn, schema)
 
 
-def decode_msgpack_frames(frames: DataFrame, frame_col: str = "frame") -> DataFrame:
+def decode_msgpack_frames(frames: DataFrame) -> DataFrame:
     """Decode EvMsgpack wire frames back into typed columns via the payload
     codec registry (codec.payloads) — the inverse of frame_msgpack_turns."""
-    from pyspark.sql.types import IntegerType, StringType
-
     from tmframe_spark.codec.frames import EV_MSGPACK
     from tmframe_spark.codec.payloads import mp_decode
 
@@ -750,7 +728,7 @@ def decode_msgpack_frames(frames: DataFrame, frame_col: str = "frame") -> DataFr
             if len(pdf) == 0:
                 continue
             recs = [
-                mp_decode(d) for d in _block_payloads(pdf[frame_col], EV_MSGPACK)
+                mp_decode(d) for d in _block_payloads(pdf["frame"], EV_MSGPACK)
             ]
             yield pd.DataFrame.from_records(recs).astype(
                 {"turn_idx": "int32", "n_chars": "int64"}

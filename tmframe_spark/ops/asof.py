@@ -18,7 +18,8 @@ last in-force build row forward with a running ``last(..., ignorenulls)``
 window. One shuffle (window over the series key), no range-join blowup —
 this is the plan shape that survives 10^12 turns, unlike the
 probe x build range join + rank dedup (O(probe*build) pairs per key),
-which we keep only as a small-data validation oracle in tests.
+which we keep only as a small-data validation oracle in tests. The union
+and window are ``_carry_forward``, shared with ops/serve's block picker.
 """
 
 from __future__ import annotations
@@ -66,66 +67,67 @@ def asof_join(
     #    per (key, ts) even when ties are hot.
     pick = F.min_by if tie == "first" else F.max_by
     reduced = build.groupBy(*by, on).agg(
-        *[pick(F.col(c), F.col(seq)).alias(c) for c in [seq] + [v for v in value_cols if v != seq]]
+        *[pick(F.col(c), F.col(seq)).alias(c) for c in carry]
     )
 
-    # 2. union with ordering flag. Probe sorts before build at equal ts for
-    #    strict (<), after for non-strict (<=).
+    # 2. carry the in-force build row forward, then SearchStatus: InFuture
+    #    past the series' largest build ts.
+    status = (
+        F.when(F.col(f"_b_{on}").isNull(), F.lit(IN_PAST))
+        .when(F.col(on) > F.col("_max_bts"), F.lit(IN_FUTURE))
+        .otherwise(F.lit(AVAIL))
+    )
+    return (
+        _carry_forward(probe, reduced, on, by, carry, strict)
+        .withColumn("status", status)
+        .drop("_max_bts")
+        .withColumnsRenamed({f"_b_{c}": f"{prefix}{c}" for c in [on, *carry]})
+    )
+
+
+def _carry_forward(probe, build, on, by, carry, strict) -> DataFrame:
+    """The union-merge: probe rows unioned with build rows unique per
+    (``by``, ``on``), ordered so a probe sorts before build rows at its
+    instant when ``strict`` (<) and after them otherwise (<=); one window
+    per series carries the last in-force build row forward. Returns the
+    probe rows, all columns kept, plus ``_b_<on>`` (matched build instant,
+    null if none), ``_b_<c>`` per ``carry`` column and ``_max_bts`` (the
+    series' largest build instant)."""
     probe_pos, build_pos = (0, 1) if strict else (1, 0)
     pcols = [c for c in probe.columns if c not in by and c != on]
+    bcols = {f"_b_{c}": c for c in [on, *carry]}  # carried <- build column
     p = probe.select(
         *by,
-        F.col(on).alias("_ts"),
+        on,
+        *pcols,
         F.lit(probe_pos).alias("_pos"),
-        F.lit(True).alias("_is_probe"),
-        *[F.col(c) for c in pcols],
-        *[F.lit(None).cast(reduced.schema[c].dataType).alias(f"_b_{c}") for c in carry],
-        F.lit(None).cast(reduced.schema[on].dataType).alias("_b_ts"),
+        *[F.lit(None).cast(build.schema[c].dataType).alias(n) for n, c in bcols.items()],
     )
-    b = reduced.select(
+    b = build.select(
         *by,
-        F.col(on).alias("_ts"),
-        F.lit(build_pos).alias("_pos"),
-        F.lit(False).alias("_is_probe"),
+        on,
         *[F.lit(None).cast(probe.schema[c].dataType).alias(c) for c in pcols],
-        *[F.col(c).alias(f"_b_{c}") for c in carry],
-        F.col(on).alias("_b_ts"),
+        F.lit(build_pos).alias("_pos"),
+        *[F.col(c).alias(n) for n, c in bcols.items()],
     )
-    u = p.unionByName(b)
-
-    # 3. carry the in-force build row forward; compute the series max build
-    #    ts for InFuture detection (max over the whole key partition).
-    w_run = (
+    run = (
         Window.partitionBy(*by)
-        .orderBy(F.col("_ts").asc(), F.col("_pos").asc())
+        .orderBy(F.col(on).asc(), F.col("_pos").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_all = Window.partitionBy(*by)
-    matched = [
-        F.last(f"_b_{c}", ignorenulls=True).over(w_run).alias(f"{prefix}{c}")
-        for c in carry
-    ]
-    out = (
-        u.select(
+    return (
+        p.unionByName(b)
+        .select(
             *by,
-            F.col("_ts"),
-            F.col("_is_probe"),
+            on,
             *pcols,
-            F.last("_b_ts", ignorenulls=True).over(w_run).alias(f"{prefix}{on}"),
-            *matched,
-            F.max("_b_ts").over(w_all).alias("_max_bts"),
+            "_pos",
+            *[F.last(n, ignorenulls=True).over(run).alias(n) for n in bcols],
+            F.max(f"_b_{on}").over(Window.partitionBy(*by)).alias("_max_bts"),
         )
-        .where(F.col("_is_probe"))
-        .withColumn(
-            "status",
-            F.when(F.col(f"{prefix}{on}").isNull(), F.lit(IN_PAST))
-            .when(F.col("_ts") > F.col("_max_bts"), F.lit(IN_FUTURE))
-            .otherwise(F.lit(AVAIL)),
-        )
-        .withColumnRenamed("_ts", on)
-        .drop("_is_probe", "_max_bts")
+        .where(F.col("_pos") == F.lit(probe_pos))
+        .drop("_pos")
     )
-    return out
 
 
 def last_in_force_before(probe, build, **kw):

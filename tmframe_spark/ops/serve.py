@@ -18,8 +18,9 @@ writes minute-boundary byte offsets so readers can seek instead of scanning
 stats turn the seek into a Catalyst filter that storage prunes on.
 
 As-of reads seek the same way, then search inside the one block they
-land in: one window over probe rows and block metadata picks, per probe,
-the block that can hold its answer (``blocks_for_asof``), and
+land in: the as-of union-merge (``ops.asof._carry_forward``) over probe
+rows and one metadata row per block picks, per probe, the block that can
+hold its answer (``blocks_for_asof``), and
 ``serve_asof`` answers each probe by binary search in the Python pass that
 decodes that block (``codec.udfs.asof_in_blocks``). Decoded points never
 become Spark rows; the pass emits one row per probe.
@@ -31,7 +32,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from tmframe_spark.ops.asof import IN_PAST, _carry_forward
 
 
 def blocks_overlapping(
@@ -65,53 +67,18 @@ def _asof_picks(
     (strictly before when ``strict``), null when there is none — and
     ``_latest``, true when ``_pick`` is the series' latest block start.
 
-    One window over the probe rows unioned with one ``(by, ts_first)``
-    metadata row per block: P probes against B blocks move P + B small
-    rows, never P x B pairs and never a decoded point. Probes sort before
-    metadata at equal instants when ``strict``, after it otherwise (the
-    ordering rule of ``ops.asof.asof_join``). No reduce step is needed:
-    block starts are unique per series (disjoint spans, see
-    ``blocks_for_asof``).
+    ``ops.asof._carry_forward`` over one ``(by, ts_first)`` row per block:
+    P + B small rows move, never P x B pairs or a decoded point. Block
+    starts are unique per series (``blocks_for_asof``), so no reduce runs.
     """
-    probe_pos, meta_pos = (0, 1) if strict else (1, 0)
+    meta = blocks.select(*by, F.col("ts_first").alias(on))
     pcols = [c for c in probes.columns if c not in by and c != on]
-    p = probes.select(
+    return _carry_forward(probes, meta, on, by, [], strict).select(
         *by,
         on,
         *pcols,
-        F.lit(probe_pos).alias("_pos"),
-        F.lit(None).cast("long").alias("_blk"),
-    )
-    m = blocks.select(
-        *by,
-        F.col("ts_first").alias(on),
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(c) for c in pcols],
-        F.lit(meta_pos).alias("_pos"),
-        F.col("ts_first").alias("_blk"),
-    )
-    run = (
-        Window.partitionBy(*by)
-        .orderBy(F.col(on).asc(), F.col("_pos").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        p.unionByName(m)
-        .select(
-            *by,
-            on,
-            *pcols,
-            "_pos",
-            F.last("_blk", ignorenulls=True).over(run).alias("_pick"),
-            F.max("_blk").over(Window.partitionBy(*by)).alias("_last_start"),
-        )
-        .where(F.col("_pos") == F.lit(probe_pos))
-        .select(
-            *by,
-            on,
-            *pcols,
-            "_pick",
-            (F.col("_pick") == F.col("_last_start")).alias("_latest"),
-        )
+        F.col(f"_b_{on}").alias("_pick"),
+        (F.col(f"_b_{on}") == F.col("_max_bts")).alias("_latest"),
     )
 
 
@@ -153,7 +120,6 @@ def serve_asof(
     v1: str | None = "v1",
     tie: str = "last",
     strict: bool = False,
-    frame_col: str = "frame",
 ) -> DataFrame:
     """Two-level as-of over the packed archive — the tfindex seek, made
     distributed (/root/reference/cmd/tfindex/tfindex.go:44-98 +
@@ -177,9 +143,14 @@ def serve_asof(
     timestamps) and any other columns, which pass through. Output columns:
     ``by``, ``on``, the other probe columns, ``m_<on>``, ``m_<v0>``,
     ``m_<v1>``, ``status``.
+
+    Archive shapes: ``jobs/rollup_job.py`` writes gap-filled day blocks, so
+    a probe at a minute with no turns inside a conversation's first-to-last
+    data minute answers with a zero point; ``jobs/archiver_job.py
+    --consolidate`` writes data points only, so it answers with the last
+    data point.
     """
     from tmframe_spark.codec.udfs import asof_in_blocks
-    from tmframe_spark.ops.asof import IN_PAST
 
     missing = [c for c in by if c not in keys]
     if missing:
@@ -200,7 +171,7 @@ def serve_asof(
     # block scan's own partitions, with no exchange before the pass
     answered = asof_in_blocks(
         blocks.join(F.broadcast(hits), [*by, "ts_first"]).select(
-            *by, frame_col, "_latest", "_probes"
+            *by, "frame", "_latest", "_probes"
         ),
         by,
         on,
@@ -208,7 +179,6 @@ def serve_asof(
         v1=v1,
         tie=tie,
         strict=strict,
-        frame_col=frame_col,
     )
     misses = (
         picks.where(F.col("_pick").isNull())
@@ -232,7 +202,6 @@ def serve_range(
     hi_ns: int,
     v0: str | None = "v0",
     v1: str | None = "v1",
-    frame_col: str = "frame",
 ) -> DataFrame:
     """Decode only the blocks overlapping [lo_ns, hi_ns] (inclusive), then
     keep exactly the in-range points.
@@ -244,7 +213,7 @@ def serve_range(
     from tmframe_spark.codec.udfs import unpack_blocks
 
     pruned = blocks_overlapping(blocks, lo_ns, hi_ns)
-    pts = unpack_blocks(pruned, keys, v0=v0, v1=v1, frame_col=frame_col)
+    pts = unpack_blocks(pruned, keys, v0=v0, v1=v1)
     return pts.where(
         (F.col("ts_ns") >= F.lit(int(lo_ns))) & (F.col("ts_ns") <= F.lit(int(hi_ns)))
     )

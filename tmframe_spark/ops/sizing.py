@@ -16,7 +16,9 @@ the input is tens of MB — no local-only constant, no cluster-only
 constant. The estimate comes from ``optimizedPlan().stats()`` (driver-side
 arithmetic over file sizes and selectivities — no job). When the estimate
 is unavailable or implausible (Catalyst's fallback is Long.MaxValue), the
-function returns the cap, i.e. exactly the pre-r7 pinned behavior.
+function returns the cap, i.e. exactly the pre-r7 pinned behavior. The
+divisor is ``DEFAULT_STAGE_BYTES`` of estimated input per partition unless
+the call passes its own ``per_partition_bytes``.
 """
 
 from __future__ import annotations
@@ -25,14 +27,14 @@ from pyspark.sql import DataFrame
 
 #: default bytes of (estimated, pre-serialization) input per Python-stage
 #: partition. Tuned so the per-task Python worker round-trip (~10 ms) stays
-#: well under the per-task compute; override per call or with the session
-#: conf key ``spark.tmframe.pythonStageBytes``.
+#: well under the per-task compute; a caller whose rows cost more or less
+#: CPU per byte passes its own ``per_partition_bytes``.
 DEFAULT_STAGE_BYTES = 256 * 1024
 
 
 def cpu_stage_partitions(
     df: DataFrame,
-    per_partition_bytes: int | None = None,
+    per_partition_bytes: int = DEFAULT_STAGE_BYTES,
     cap: int | None = None,
 ) -> int:
     """Partition count for a heavy-CPU mapInPandas stage fed by ``df``.
@@ -40,13 +42,8 @@ def cpu_stage_partitions(
     = clamp(ceil(estimated_input_bytes / per_partition_bytes), 1, cap)
     with cap defaulting to spark.sql.shuffle.partitions (the pre-r7 pin).
     """
-    sess = df.sparkSession
     if cap is None:
-        cap = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    if per_partition_bytes is None:
-        per_partition_bytes = int(
-            sess.conf.get("spark.tmframe.pythonStageBytes", str(DEFAULT_STAGE_BYTES))
-        )
+        cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:

@@ -201,6 +201,17 @@ def rolling_median(
     )
 
 
+def check_ewma_domain(vals, k: int, what: str) -> None:
+    """Fail closed outside ewma's declared domain |value| < 2^(62-k)."""
+    lim = 1 << (62 - k)
+    bad = (vals >= lim) | (vals <= -lim)
+    if bad.any():
+        raise ValueError(
+            f"ewma: |{what}| must be < 2^{62 - k} at k={k} "
+            f"(the Q_k state is int64); got {vals[bad][0]}"
+        )
+
+
 def ewma(
     rolled: DataFrame,
     value_col: str = "token_volume",
@@ -246,7 +257,6 @@ def ewma(
     if k < 1 or k > 30:
         raise ValueError(f"ewma k must be in [1, 30], got {k}")
     shift = k
-    lim = 1 << (62 - shift)
 
     src = rolled.select(
         "conv_id", "bucket", F.col(value_col).cast("long").alias("value")
@@ -260,12 +270,7 @@ def ewma(
             if not n:
                 continue
             vals = pdf["value"].to_numpy()
-            if (vals >= lim).any() or (vals <= -lim).any():
-                raise ValueError(
-                    f"ewma: |{value_col}| must be < 2^{62 - shift} at k={shift} "
-                    f"(the Q_k state is int64); got "
-                    f"{vals[(vals >= lim) | (vals <= -lim)][0]}"
-                )
+            check_ewma_domain(vals, shift, value_col)
             convs = pdf["conv_id"].to_numpy()
             change = _np.empty(n, dtype=bool)
             change[0] = True

@@ -67,17 +67,34 @@ def _exactly_once_writer(table_root: str, table: str, write_fn):
     return write_batch
 
 
-def _batch_writer(table_root: str, table: str):
-    def write_rows(df: DataFrame, batch_dir: str) -> dict:
-        # eager localCheckpoint, not persist (repo rule): one computation
-        # feeds both the write and the count, blocks auto-release on GC
-        df = df.localCheckpoint(eager=True)
-        df.withColumn("day", F.to_date("bucket")).repartition("day").write.mode(
-            "overwrite"
-        ).partitionBy("day").parquet(batch_dir)
-        return {"rows": df.count()}
+def _start_sink(
+    spark, source_path, schema, max_files, shape, write_fn,
+    table_root, table, checkpoint, available_now,
+):
+    """Start a continuous materializer: append ``shape(transcript stream)``
+    through the exactly-once writer around ``write_fn``, checkpointed under
+    ``table_root/_<table>_checkpoint`` unless ``checkpoint`` is given."""
+    stream = read_transcript_stream(spark, source_path, schema, max_files)
+    checkpoint = checkpoint or os.path.join(table_root, f"_{table}_checkpoint")
+    writer = (
+        shape(stream)
+        .writeStream.foreachBatch(_exactly_once_writer(table_root, table, write_fn))
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
-    return _exactly_once_writer(table_root, table, write_rows)
+
+def _write_rows(df: DataFrame, batch_dir: str) -> dict:
+    # eager localCheckpoint, not persist (repo rule): one computation
+    # feeds both the write and the count, blocks auto-release on GC
+    df = df.localCheckpoint(eager=True)
+    df.withColumn("day", F.to_date("bucket")).repartition("day").write.mode(
+        "overwrite"
+    ).partitionBy("day").parquet(batch_dir)
+    return {"rows": df.count()}
 
 
 def materialize_continuous_rollup(
@@ -95,17 +112,12 @@ def materialize_continuous_rollup(
     """Run (or drain, with availableNow) the continuous rollup into
     ``table_root/<table>/day=*``. Returns the StreamingQuery."""
     table = table or f"rollup_{tier}_stream"
-    checkpoint = checkpoint or os.path.join(table_root, f"_{table}_checkpoint")
-    stream = read_transcript_stream(spark, source_path, schema, max_files)
-    rolled = stream_rollup(stream, tier, watermark)
-    writer = (
-        rolled.writeStream.foreachBatch(_batch_writer(table_root, table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_sink(
+        spark, source_path, schema, max_files,
+        lambda stream: stream_rollup(stream, tier, watermark),
+        _write_rows,
+        table_root, table, checkpoint, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_materialized(spark: SparkSession, table_root: str, table: str) -> DataFrame:
@@ -167,32 +179,29 @@ def record_late_drops(
     return out
 
 
-def _block_batch_writer(table_root: str, table: str):
-    def write_blocks(df: DataFrame, batch_dir: str) -> dict:
-        from tmframe_spark.codec.udfs import bucket_ts_ns, pack_blocks
+def _write_blocks(df: DataFrame, batch_dir: str) -> dict:
+    from tmframe_spark.codec.udfs import bucket_ts_ns, pack_blocks
 
-        pts = df.select(
-            "conv_id",
-            F.to_date("bucket").alias("day"),
-            bucket_ts_ns().alias("ts_ns"),
-            F.col("token_volume").cast("double").alias("v0"),
-            F.col("turns").cast("long").alias("v1"),
-        )
-        # one computation feeds the write and the metrics (repo rule:
-        # eager localCheckpoint, never persist)
-        blocks = pack_blocks(pts, ["conv_id", "day"], v0="v0", v1="v1").localCheckpoint(
-            eager=True
-        )
-        blocks.repartition("day").write.mode("overwrite").partitionBy("day").parquet(
-            batch_dir
-        )
-        stats = blocks.agg(
-            F.count(F.lit(1)).alias("blocks"),
-            F.coalesce(F.sum("n_points"), F.lit(0)).alias("points"),
-        ).collect()[0]
-        return {"blocks": int(stats["blocks"]), "points": int(stats["points"])}
-
-    return _exactly_once_writer(table_root, table, write_blocks)
+    pts = df.select(
+        "conv_id",
+        F.to_date("bucket").alias("day"),
+        bucket_ts_ns().alias("ts_ns"),
+        F.col("token_volume").cast("double").alias("v0"),
+        F.col("turns").cast("long").alias("v1"),
+    )
+    # one computation feeds the write and the metrics (repo rule:
+    # eager localCheckpoint, never persist)
+    blocks = pack_blocks(pts, ["conv_id", "day"], v0="v0", v1="v1").localCheckpoint(
+        eager=True
+    )
+    blocks.repartition("day").write.mode("overwrite").partitionBy("day").parquet(
+        batch_dir
+    )
+    stats = blocks.agg(
+        F.count(F.lit(1)).alias("blocks"),
+        F.coalesce(F.sum("n_points"), F.lit(0)).alias("points"),
+    ).collect()[0]
+    return {"blocks": int(stats["blocks"]), "points": int(stats["points"])}
 
 
 def _consolidation_manifest_path(table_root: str, table: str) -> str:
@@ -224,7 +233,9 @@ def consolidate_stream_blocks(
     (partitioning-independence is a tested invariant, tests/test_blocks),
     the result is BYTE-IDENTICAL to an archive built by a single batch
     pack of the same points: the streamed archive converges to the batch
-    archive exactly.
+    archive exactly. It holds data points only, not the gap-filled day
+    blocks of ``jobs/rollup_job.py``: an as-of probe at a minute with no
+    turns answers with the last data point, not a zero (``serve_asof``).
 
     Day-scoped and idempotent like ``Catalog.compact_day`` (overwrite_day
     per day), so it runs behind the streaming frontier day by day. Returns
@@ -314,20 +325,15 @@ def materialize_continuous_blocks(
     Returns the StreamingQuery.
     """
     table = table or f"blocks_{tier}_stream"
-    checkpoint = checkpoint or os.path.join(table_root, f"_{table}_checkpoint")
-    stream = read_transcript_stream(spark, source_path, schema, max_files)
-    rolled = stream_rollup(stream, tier, watermark)
-    writer = (
-        rolled.writeStream.foreachBatch(_block_batch_writer(table_root, table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_sink(
+        spark, source_path, schema, max_files,
+        lambda stream: stream_rollup(stream, tier, watermark),
+        _write_blocks,
+        table_root, table, checkpoint, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def _topk_batch_writer(table_root: str, table: str, k: int):
+def _topk_writer(k: int):
     """MG-compress each finalized bucket's complete count table before it
     lands: the stored tier is <= k rows per bucket with the derived
     err = n_total - sum(cnt) bound (ops/rollup semantics, byte-identical
@@ -347,7 +353,7 @@ def _topk_batch_writer(table_root: str, table: str, k: int):
         ).partitionBy("day").parquet(batch_dir)
         return {"rows": sk.count()}
 
-    return _exactly_once_writer(table_root, table, write_rows)
+    return write_rows
 
 
 def materialize_continuous_topk(
@@ -371,14 +377,9 @@ def materialize_continuous_topk(
     from tmframe_spark.streaming.stream import stream_topk_counts
 
     table = table or f"topk_{tier}_stream"
-    checkpoint = checkpoint or os.path.join(table_root, f"_{table}_checkpoint")
-    stream = read_transcript_stream(spark, source_path, schema, max_files)
-    counts = stream_topk_counts(stream, tier, key_col, watermark)
-    writer = (
-        counts.writeStream.foreachBatch(_topk_batch_writer(table_root, table, k))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_sink(
+        spark, source_path, schema, max_files,
+        lambda stream: stream_topk_counts(stream, tier, key_col, watermark),
+        _topk_writer(k),
+        table_root, table, checkpoint, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -221,10 +221,14 @@ def stream_ewma(
     batch op over materialized tiers, not here: a stream never observes
     an empty bucket. The emitted ``ewma_q`` values are bit-identical to
     the batch recurrence applied to the same value sequence (pinned in
-    tests/test_streaming_stateful.py).
+    tests/test_streaming_stateful.py), and a value outside the batch op's
+    declared domain |value| < 2^(62-k) fails the query with the batch op's
+    ValueError.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
+
+    from tmframe_spark.ops.stats import check_ewma_domain
 
     if k < 1 or k > 30:
         raise ValueError(f"stream_ewma k must be in [1, 30], got {k}")
@@ -242,6 +246,7 @@ def stream_ewma(
         for pdf in pdfs:
             if not len(pdf):
                 continue
+            check_ewma_domain(pdf["value"].to_numpy(), k, value_col or "length(text)")
             pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
             out = []
             for v in pdf["value"]:
