@@ -239,8 +239,9 @@ def test_serve_asof_duplicate_timestamps_follow_seq_order(spark):
 def test_serve_asof_edge_cases_equal_decode_all_asof(spark):
     """A tiny archive whose 3-block series has gaps between its blocks:
     duplicate probe rows, a carried probe column, a probe in a gap, a probe
-    on a block's ts_first under strict, probes before/after the series, an
-    ``on`` column not named ts_ns and ``v1=None`` all match decode-everything
+    on a block's ts_first under strict, probes before/after the series, a
+    null series key, an ``on`` column not named ts_ns and ``v1=None`` all
+    match decode-everything
     asof_join; and blocks_for_asof picks exactly the expected blocks."""
     from tmframe_spark.ops.asof import asof_join
     from tmframe_spark.ops.serve import blocks_for_asof, serve_asof
@@ -267,6 +268,7 @@ def test_serve_asof_edge_cases_equal_decode_all_asof(spark):
             ("a", 99999, 5),   # past the end -> InFuture
             ("b", 1500, 6),    # single-point series
             ("c", 1500, 7),    # series with no blocks -> InPast
+            (None, 1500, 8),   # null series key -> InPast
         ],
         "conv_id string, t long, probe_hour long",
     )
@@ -336,6 +338,36 @@ def test_serve_asof_plan_answers_inside_the_decode(spark):
     bad = [a for a in ancestors if any(w in a for w in ("Window", "Exchange", "Aggregate"))]
     assert not bad, plan.toString()
     assert "Window" in [n.nodeName() for n, _ in _walk(node)], plan.toString()
+
+
+def test_serve_asof_reads_its_probes_once(spark):
+    """The probe relation is scanned once: the hit and miss branches share
+    one exchange of the picks window, and null-key probes leave through the
+    misses instead of a second scan of the probes."""
+    import re
+
+    from tmframe_spark.ops.serve import serve_asof
+
+    pts = spark.createDataFrame(
+        [("a", "d1", 1000, 1.0), ("a", "d2", 5000, 4.0)],
+        "conv_id string, day string, ts_ns long, v0 double",
+    )
+    blocks = pack_blocks(pts, ["conv_id", "day"], v0="v0").localCheckpoint()
+    probes = spark.createDataFrame(
+        [("a", 1500, 0), ("b", 10, 1), (None, 10, 2)],
+        "conv_id string, ts_ns long, probe_tag long",
+    )
+    out = serve_asof(blocks, ["conv_id", "day"], ["conv_id"], probes)
+    assert sorted((r["probe_tag"], r["status"]) for r in out.collect()) == [
+        (0, "Avail"), (1, "InPast"), (2, "InPast")
+    ]
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    scans = [
+        re.sub(r"#\d+L?", "", cols)
+        for cols in re.findall(r"Scan ExistingRDD\[([^\]]*)\]", final)
+    ]
+    assert scans.count("conv_id,ts_ns,probe_tag") == 1, final
 
 
 def test_blocks_for_asof_plan_has_no_aggregate(spark):

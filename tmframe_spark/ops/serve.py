@@ -155,22 +155,31 @@ def serve_asof(
     missing = [c for c in by if c not in keys]
     if missing:
         raise ValueError(f"series keys {missing} are not block keys {keys}")
-    # a null series key matches no block; filtering both sides up front
-    # keeps the two consumers of the picks window on one identical
-    # exchange, which the planner then shares
+    # a null series key matches no block: with null-key blocks dropped, a
+    # null-key probe gets a null ``_pick`` and leaves through the misses.
+    # The probes are read once, by the one picks exchange both branches
+    # share; the hits join matches series keys null-safely, because an
+    # equi-join would push an inferred not-null filter into the hits
+    # branch's copy of that exchange alone, and the planner would then
+    # shuffle the probes twice
     keyed = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in by])
-    picks = _asof_picks(blocks.where(keyed), by, probes.where(keyed), on, strict)
+    picks = _asof_picks(blocks.where(keyed), by, probes, on, strict)
     pcols = [c for c in probes.columns if c not in by and c != on]
     m_cols = [f"m_{c}" for c in (on, v0, v1) if c]
     hits = (
         picks.where(F.col("_pick").isNotNull())
-        .groupBy(*by, F.col("_pick").alias("ts_first"), "_latest")
+        .groupBy(*[F.col(c).alias(f"_h_{c}") for c in by], "_pick", "_latest")
         .agg(F.collect_list(F.struct(on, *pcols)).alias("_probes"))
+    )
+    match = reduce(
+        lambda a, b: a & b,
+        [F.col(c).eqNullSafe(F.col(f"_h_{c}")) for c in by],
+        F.col("ts_first") == F.col("_pick"),
     )
     # the picked side is small: broadcast it so the decode runs in the
     # block scan's own partitions, with no exchange before the pass
     answered = asof_in_blocks(
-        blocks.join(F.broadcast(hits), [*by, "ts_first"]).select(
+        blocks.join(F.broadcast(hits), match).select(
             *by, "frame", "_latest", "_probes"
         ),
         by,
@@ -182,8 +191,6 @@ def serve_asof(
     )
     misses = (
         picks.where(F.col("_pick").isNull())
-        .select(*probes.columns)
-        .unionByName(probes.where(~keyed))
         .select(
             *by,
             on,

@@ -5,9 +5,14 @@ mapInPandas stages: AQE's byte-based coalescing sees tiny bytes, decides
 one partition is plenty, and serializes minutes of per-row CPU onto one
 core (measured repeatedly since round 2). But a FIXED pin has the inverse
 problem at the small end: a 100k-row input split 64 ways pays 64 Python
-worker round-trips of ~10 ms each for ~5 ms of work per task (measured:
-the msgpack encode stage ran 0.69 s at 8 partitions vs 1.0 s at 64 on the
-same input).
+task start-ups for ~5 ms of work per task (measured: the msgpack encode
+stage ran 0.69 s at 8 partitions vs 1.0 s at 64 on the same input). The
+MapInPandas SQL metric "time to initialize Python workers", over the 56k-row
+perfbench 1m rollup at local[4] (4 vCPU) with warm workers, reads
+150-730 ms per task under pyspark's own daemon, 0.12-0.25 s of it CPU spent
+re-reading zip archives; under ``tmframe_spark.worker_daemon``, which
+removes that re-read, 140-250 ms for each task of a stage's first wave and
+0-1 ms for the tasks after it.
 
 ``cpu_stage_partitions`` derives the pin from the optimizer's size
 estimate for the exchange's input, so the SAME code picks ~a handful of
@@ -26,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 #: default bytes of (estimated, pre-serialization) input per Python-stage
-#: partition. Tuned so the per-task Python worker round-trip (~10 ms) stays
+#: partition. Tuned so the per-task Python start-up (module docstring) stays
 #: well under the per-task compute; a caller whose rows cost more or less
 #: CPU per byte passes its own ``per_partition_bytes``.
 DEFAULT_STAGE_BYTES = 256 * 1024

@@ -34,7 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tmframe_spark.streaming.materialize import _exactly_once_writer
+from tmframe_spark.streaming.materialize import _exactly_once_writer, _start_sink
 from tmframe_spark.text.incremental import (
     dedup_against_index,
     minhash_index_append,
@@ -47,29 +47,17 @@ def _batch_token(table_root: str, batch_id: int) -> str:
     return hashlib.md5(f"{table_root}|{batch_id}".encode()).hexdigest()
 
 
-def dedup_ingest_writer(
+def _ingest_write_fn(
     table_root: str,
     index_path: str,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = "docs",
-    ann_index_path: str | None = None,
-    embed_dim: int = 64,
+    threshold: float,
+    id_col: str,
+    text_col: str,
+    ann_index_path: str | None,
+    embed_dim: int,
 ):
-    """The foreachBatch function implementing the module protocol (kept
-    separately constructible so tests can drive single batches, replays,
-    and crash windows directly).
-
-    ``ann_index_path``: an EXISTING IVF+PQ index (ivfpq_build_index —
-    quantizers frozen at build time, the standard ingest contract): each
-    batch's survivors are hash-embedded (vec/embed, ``embed_dim`` dims)
-    and appended under the batch's own deterministic token
-    (``<token>-ann``) — ivfpq_append's committed-token no-op makes this
-    leg exactly-once under the same replays as the rest of the protocol.
-    The full continuous pipeline: documents land → dedup against the
-    corpus → survivors enter the dedup index, the doc table, AND the
-    ANN-servable vector index, atomically per micro-batch."""
+    """Steps 1-3 of the module protocol for one micro-batch, as a
+    ``write_fn(df, batch_dir) -> metrics`` for the exactly-once writer."""
 
     def write_fn(df: DataFrame, batch_dir: str) -> dict:
         from tmframe_spark.text.dedup import minhash_signatures
@@ -115,7 +103,40 @@ def dedup_ingest_writer(
             out["ann_batches"] = len(ameta.get("batches", []))
         return out
 
-    return _exactly_once_writer(table_root, table, write_fn)
+    return write_fn
+
+
+def dedup_ingest_writer(
+    table_root: str,
+    index_path: str,
+    threshold: float = 0.5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    table: str = "docs",
+    ann_index_path: str | None = None,
+    embed_dim: int = 64,
+):
+    """The foreachBatch function implementing the module protocol (kept
+    separately constructible so tests can drive single batches, replays,
+    and crash windows directly).
+
+    ``ann_index_path``: an EXISTING IVF+PQ index (ivfpq_build_index —
+    quantizers frozen at build time, the standard ingest contract): each
+    batch's survivors are hash-embedded (vec/embed, ``embed_dim`` dims)
+    and appended under the batch's own deterministic token
+    (``<token>-ann``) — ivfpq_append's committed-token no-op makes this
+    leg exactly-once under the same replays as the rest of the protocol.
+    The full continuous pipeline: documents land → dedup against the
+    corpus → survivors enter the dedup index, the doc table, AND the
+    ANN-servable vector index, atomically per micro-batch."""
+    return _exactly_once_writer(
+        table_root,
+        table,
+        _ingest_write_fn(
+            table_root, index_path, threshold, id_col, text_col,
+            ann_index_path, embed_dim,
+        ),
+    )
 
 
 def materialize_dedup_ingest(
@@ -138,25 +159,14 @@ def materialize_dedup_ingest(
     survivors appended there and materialized under
     ``table_root/docs/batch=*`` (and, with ``ann_index_path``, embedded +
     appended to the IVF+PQ index). Returns the StreamingQuery."""
-    checkpoint = checkpoint or os.path.join(table_root, "_docs_checkpoint")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(source_path)
-    )
-    writer = dedup_ingest_writer(
-        table_root, index_path, threshold, id_col, text_col,
-        ann_index_path=ann_index_path, embed_dim=embed_dim,
-    )
-    return (
-        stream.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        if available_now
-        else stream.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _start_sink(
+        spark, source_path, schema, max_files,
+        lambda stream: stream,
+        _ingest_write_fn(
+            table_root, index_path, threshold, id_col, text_col,
+            ann_index_path, embed_dim,
+        ),
+        table_root, "docs", checkpoint, available_now,
     )
 
 
