@@ -56,10 +56,9 @@ def main(argv=None) -> int:
     if args.consolidate and args.continuous:
         p.error("--consolidate only makes sense after a drain (omit --continuous)")
 
-    from pyspark.sql import SparkSession
+    from tmframe_spark.session import engine_builder
 
-    spark = SparkSession.builder.appName("tmframe-archiver").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = engine_builder("tmframe-archiver").getOrCreate()
 
     from tmframe_spark.streaming.materialize import (
         consolidate_stream_blocks,

@@ -129,11 +129,11 @@ def main(argv=None) -> int:
     p.add_argument("--pack-out", default=None)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("tmframe-curate").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    from tmframe_spark.session import engine_builder
+
+    spark = engine_builder("tmframe-curate").getOrCreate()
 
     # stage-boundary checkpoints re-spread their output first (r7): a
     # checkpoint materializes at whatever partitioning the stage ended

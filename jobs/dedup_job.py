@@ -53,10 +53,9 @@ def main(argv=None) -> int:
     p.add_argument("--contamination-threshold", type=float, default=0.05)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from tmframe_spark.session import engine_builder
 
-    spark = SparkSession.builder.appName("tmframe-dedup").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = engine_builder("tmframe-dedup").getOrCreate()
 
     from tmframe_spark.text.dedup import (
         dedup_clusters,

@@ -47,13 +47,11 @@ def main(argv=None) -> int:
     p.add_argument("--embed-dim", type=int, default=64)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
+    from tmframe_spark.session import engine_builder
     from tmframe_spark.streaming.ingest import materialize_dedup_ingest
     from tmframe_spark.text.incremental import minhash_index_write, read_index_meta
 
-    spark = SparkSession.builder.appName("tmframe-ingest").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = engine_builder("tmframe-ingest").getOrCreate()
 
     schema = spark.read.parquet(args.source).schema
     if args.init_index and not os.path.exists(

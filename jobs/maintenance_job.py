@@ -41,10 +41,9 @@ def main(argv=None) -> int:
                    help="leave the newest N days uncompacted (the ingest frontier)")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from tmframe_spark.session import engine_builder
 
-    spark = SparkSession.builder.appName("tmframe-maintenance").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = engine_builder("tmframe-maintenance").getOrCreate()
 
     from tmframe_spark.data.catalog import Catalog
     from tmframe_spark.ops.retention import vacuum_expired_days

@@ -11,9 +11,8 @@ ops/checkpoint.stale_days): the overwrite-day unit keeps it idempotent
 and untouched days are never rewritten.
 
 Build the archive with scripts/make_pyfiles.sh (writes tmframe_spark.zip).
-On a real cluster the session builder's master/sizing comes from
-spark-submit; get_spark() only sets engine-semantics configs when the
-session already exists.
+The session carries the engine conf table (session.engine_builder); master
+and sizing come from spark-submit.
 """
 
 from __future__ import annotations
@@ -36,10 +35,9 @@ def main(argv=None) -> int:
     p.add_argument("--synth-convs", type=int, default=2000)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from tmframe_spark.session import engine_builder
 
-    spark = SparkSession.builder.appName("tmframe-rollup").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = engine_builder("tmframe-rollup").getOrCreate()
 
     from tmframe_spark.data.transcripts import synth_transcripts
     from tmframe_spark.ops.checkpoint import checkpointed_rollup_run

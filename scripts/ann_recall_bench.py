@@ -44,7 +44,7 @@ def main():
     )
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(cores=32, app_name="ann-recall-bench")
+    spark = get_spark(app_name="ann-recall-bench")
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").localCheckpoint()
     n = emb.count()

@@ -30,7 +30,7 @@ def main() -> None:
     from tmframe_spark.session import get_spark
     from tmframe_spark.text.incremental import minhash_index_write
 
-    spark = get_spark(cores=32, shuffle_partitions=64, app_name="curate-rehearsal")
+    spark = get_spark(app_name="curate-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
 
     prior = spark.read.parquet(SF01)

@@ -45,7 +45,7 @@ sys.path.insert(0, {repo!r})
 from tmframe_spark.session import get_spark
 from tmframe_spark.data.transcripts import synth_transcripts
 n_turns, n_convs, out = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3]
-spark = get_spark(cores=32, app_name="scaling-gen")
+spark = get_spark(app_name="scaling-gen")
 spark.sparkContext.setLogLevel("ERROR")
 synth_transcripts(spark, n_turns, n_convs).write.mode("overwrite").parquet(out)
 spark.stop()
@@ -67,26 +67,18 @@ CORES_PER_EXEC = 1
 RUNNER = """
 import json, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
+from tmframe_spark.session import DAEMON_CONF, engine_builder
 from tmframe_spark.ops.rollup import with_ts_ns
 from bench import flagship_from_transcripts
 n_exec, inp, warm = int(sys.argv[1]), sys.argv[2], sys.argv[3]
 cpe = """ + str(CORES_PER_EXEC) + """
 mem_mb = 49152 // n_exec if n_exec <= 4 else 12288
 spark = (
-    SparkSession.builder.master(f"local-cluster[{{n_exec}},{{cpe}},{{mem_mb}}]")
-    .appName(f"scaling-{{n_exec}}x{{cpe}}")
+    engine_builder(f"scaling-{{n_exec}}x{{cpe}}")
+    .master(f"local-cluster[{{n_exec}},{{cpe}},{{mem_mb}}]")
     .config("spark.executorEnv.PYTHONPATH", {repo!r})
-    .config("spark.sql.session.timeZone", "UTC")
+    .config(map=DAEMON_CONF)
     .config("spark.sql.shuffle.partitions", str(max(16, 8 * n_exec)))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-    .config("spark.python.unix.domain.socket.enabled", "true")
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")

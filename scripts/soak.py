@@ -1,5 +1,5 @@
 """sf1-class soak: the flagship at the scaling-protocol input (seeded
-synthetic transcripts, ~26x the sf0.1 bench input) on local[32], with peak
+synthetic transcripts, ~26x the sf0.1 bench input) on local[SPARK_GRAFT_CPUS or *], with peak
 process memory sampled across the JVM and every Python worker.
 
 Evidence for: (a) the flagship completes a ~1.7B-rolled-point run in one
@@ -82,7 +82,7 @@ def main() -> None:
     from bench import flagship_synth_points
     from tmframe_spark.session import get_spark
 
-    spark = get_spark(cores=32, shuffle_partitions=64, app_name="tmframe-soak")
+    spark = get_spark(app_name="tmframe-soak")
     spark.sparkContext.setLogLevel("ERROR")
     # warm codegen/JIT on a 1%-scale same-shape input (scaling.py protocol)
     flagship_synth_points(spark, max(n_turns // 100, 10_000), max(n_convs // 10, 10))

@@ -138,11 +138,11 @@ def test_unpack_projected_input_stays_bounded_and_equal(spark):
 @settings(max_examples=60, deadline=None)
 @given(st.data())
 def test_vectorized_packer_matches_scalar_twin(data):
-    """The vectorized record packer (large gap-filled path) must stay
-    byte-identical to the pure-Python scalar _BitWriter twins (the small
-    path) for the same (n, idx, vals) — including across the small/large
-    threshold, negative dods, the 64-bit payload class, and Gorilla
-    window-reuse chains."""
+    """Both vectorized encoders — a one-block encode_blocks_gapfilled_batch
+    and encode_block over the materialized spine — must stay byte-identical
+    to the pure-Python scalar twin encode_block_gapfilled for the same
+    (n, idx, vals): negative dods, the 64-bit payload class, inf floats,
+    Gorilla window-reuse chains, and blocks holding 0 to 80 data points."""
     n = data.draw(st.integers(min_value=1, max_value=400))
     k = data.draw(st.integers(min_value=0, max_value=min(n, 80)))
     idx = np.sort(
@@ -186,52 +186,28 @@ def test_vectorized_packer_matches_scalar_twin(data):
         dtype=np.int64,
     )
     t0, step = 1_704_067_200_000_000_000, 60_000_000_000
-    if k == 0:
-        v0 = v1 = None
 
-    # scalar oracle: the small-path twins, forced regardless of len(idx)
-    w = bk._BitWriter()
-    bk._encode_regular_ts(w, t0, step, n)
-    if v0 is not None:
-        bk._encode_xor_sparse_small(
-            w, n, idx.tolist(), v0.view(np.uint64).tolist()
-        )
-    if v1 is not None:
-        bk._encode_dod_sparse_small(w, n, idx.tolist(), v1.tolist())
-    flags = (1 if v0 is not None else 0) | (2 if v1 is not None else 0)
-    import struct
-
-    oracle = (
-        bk.BLOCK_MAGIC
-        + struct.pack("<BBI", bk.BLOCK_VERSION, flags, n)
-        + w.finish()
+    oracle = bk.encode_block_gapfilled(t0, step, n, idx, v0, v1)
+    batch = bk.encode_blocks_gapfilled_batch(
+        [t0], step, [n], np.zeros(k, dtype=np.int64), idx, v0, v1
     )
-
-    # vectorized path, forced regardless of len(idx)
-    streams = [bk._ts_regular_records(t0, step, n)]
-    if v0 is not None:
-        streams.append(bk._xor_records_sparse(n, idx, v0))
-    if v1 is not None:
-        streams.append(bk._dod_records_sparse(n, idx, v1))
-    vec = (
-        bk.BLOCK_MAGIC
-        + struct.pack("<BBI", bk.BLOCK_VERSION, flags, n)
-        + bk._pack_streams(streams)
-    )
-    assert vec == oracle
-    # and the public entry point (whichever path it chose) agrees too
-    assert bk.encode_block_gapfilled(t0, step, n, idx, v0, v1) == oracle
+    assert batch == [oracle]
+    spine = t0 + np.arange(n, dtype=np.int64) * step
+    dense_v0, dense_v1 = np.zeros(n), np.zeros(n, dtype=np.int64)
+    dense_v0[idx], dense_v1[idx] = v0, v1
+    assert bk.encode_block(spine, dense_v0, dense_v1) == oracle
+    # a block without value streams: the timestamp stream alone
+    assert bk.encode_block(spine) == bk.encode_block_gapfilled(t0, step, n, idx)
 
 
 def test_xor_jump_scan_adversarial_window_churn_guard():
     """Worst-case alternating (lz, tz) xor patterns: EVERY record opens a
-    new Gorilla window, which would make the vectorized jump scan O(K^2)
-    whole-array work — the opener-density guard (25% of the scanned prefix)
-    must switch to the O(K) scalar scan after a constant number of probes
-    while staying byte-identical to the pure-Python scalar twin, and the
-    bytes must decode round-trip (round-4 verdict #4 / advice #2)."""
-    import struct
-
+    new Gorilla window, which would make encode_block's vectorized jump
+    scan O(K^2) whole-array work — the opener-density guard (25% of the
+    scanned prefix) must switch to the O(K) scalar scan after a constant
+    number of probes while staying byte-identical to the pure-Python scalar
+    twin, and the bytes must decode round-trip (round-4 verdict #4 /
+    advice #2)."""
     n = 4001
     xors = np.empty(n - 1, dtype=np.uint64)
     xors[0::2] = np.uint64(1) << np.uint64(63)  # window (lz=0, tz=63)
@@ -244,28 +220,21 @@ def test_xor_jump_scan_adversarial_window_churn_guard():
     t0, step = 1_704_067_200_000_000_000, 60_000_000_000
     idx = np.arange(n, dtype=np.int64)
 
-    w = bk._BitWriter()
-    bk._encode_regular_ts(w, t0, step, n)
-    bk._encode_xor_sparse_small(w, n, idx.tolist(), bits.tolist())
-    oracle = bk.BLOCK_MAGIC + struct.pack("<BBI", bk.BLOCK_VERSION, 1, n) + w.finish()
-    got = bk.encode_block_gapfilled(t0, step, n, idx, v0, None)
+    oracle = bk.encode_block_gapfilled(t0, step, n, idx, v0, None)
+    got = bk.encode_block(t0 + idx * step, v0, None)
     assert got == oracle
     ts, dv0, dv1 = bk.decode_block(got)
     assert np.array_equal(ts, t0 + idx * step)
     assert np.array_equal(dv0.view(np.uint64), bits) and dv1 is None
-    # the dense encoder shares the guarded plan builder — round-trip it too
-    dense = bk.encode_block(ts, v0, None)
-    dts, ddv0, _ = bk.decode_block(dense)
-    assert np.array_equal(dts, ts) and np.array_equal(ddv0.view(np.uint64), bits)
 
 
 @settings(max_examples=40, deadline=None)
 @given(st.data())
 def test_batch_encode_matches_per_block(data):
-    """encode_blocks_gapfilled_batch (the whole-conversation vectorized
-    pass used by pack_rollup_blocks) must be byte-identical to per-block
-    encode_block_gapfilled — including empty blocks, single-point spines,
-    and blocks landing on both sides of the small/large threshold."""
+    """encode_blocks_gapfilled_batch (the encoder pack_rollup_blocks runs)
+    must be byte-identical to the per-block scalar twin
+    encode_block_gapfilled — including empty blocks and single-point
+    spines."""
     rng = np.random.default_rng(data.draw(st.integers(min_value=0, max_value=2**31)))
     nb = data.draw(st.integers(min_value=1, max_value=8))
     ns = rng.integers(1, 120, size=nb).astype(np.int64)
@@ -298,6 +267,33 @@ def test_batch_encode_matches_per_block(data):
             int(t0s[b]), step, int(ns[b]), idx[m], v0[m], v1[m]
         )
         assert got[b] == want
+
+
+def test_batch_encode_slices_match_per_block():
+    """The batch encoder cuts its blocks into whole-block passes of at most
+    BATCH_ROW_BUDGET data rows; blocks on both sides of every cut, empty
+    blocks between them, and a month-long 1m block holding more than the
+    budget (a pass of its own) must all equal the per-block scalar twin."""
+    rng = np.random.default_rng(7)
+    day, step = 1440, 60_000_000_000
+    ns = [day] * 33 + [31 * day, 1, day, 5]
+    ks = [day] * 30 + [0, 17, 0] + [31 * day - 3000, 1, 0, 5]
+    bids = np.repeat(np.arange(len(ns)), ks).astype(np.int64)
+    idx = np.concatenate(
+        [np.sort(rng.choice(n, size=k, replace=False)) for n, k in zip(ns, ks)]
+    ).astype(np.int64)
+    t0s = 1_704_067_200_000_000_000 + np.arange(len(ns), dtype=np.int64) * 86_400 * 10**9
+    v0 = np.round(rng.gamma(2.0, 300.0, len(bids)), 1)
+    v1 = rng.integers(0, 40, len(bids)).astype(np.int64)
+
+    cuts = list(bk.budget_slices(np.bincount(bids, minlength=len(ns)), bk.BATCH_ROW_BUDGET))
+    assert len(cuts) >= 3 and (33, 34) in cuts  # the oversize block rides alone
+    got = bk.encode_blocks_gapfilled_batch(t0s, step, ns, bids, idx, v0, v1)
+    assert len(got) == len(ns)
+    for b in range(len(ns)):
+        m = bids == b
+        want = bk.encode_block_gapfilled(int(t0s[b]), step, ns[b], idx[m], v0[m], v1[m])
+        assert got[b] == want, f"block {b} differs"
 
 
 def test_malformed_blocks_fail_closed():

@@ -78,15 +78,14 @@ def test_ten_year_conversation_pack_carry_bound(spark):
     assert nz["v0"].tolist() == [1000.0 + i for i in range(120)]
 
 
-def test_dense_conversation_routes_per_block_and_matches(spark):
-    """A conversation above the ~400-data-rows-per-block routing threshold
-    (pack_many encodes its blocks one by one) must produce blocks
-    byte-identical to the compositional gap_fill -> pack_blocks path — the
-    two encoder routes share no code path (whole-array per-block vs
-    segmented batch), so this pins the router itself."""
+def test_dense_conversation_blocks_match_compositional(spark):
+    """Fully dense day blocks (1440 data rows each) next to a sparse
+    conversation must produce blocks byte-identical to the compositional
+    gap_fill -> pack_blocks path, whose encode_block shares no code with
+    the batch encoder pack_rollup_blocks runs."""
     import pandas as pd
 
-    # 3 days fully dense at 1m (1440 rows/day > 400 threshold) + 1 sparse
+    # 3 days fully dense at 1m (1440 rows/day) + 1 sparse
     # day, two convs (one crosses midnight with a gap)
     rows = []
     for conv, days, dense in [("conv-dense", 3, True), ("conv-mixed", 2, False)]:
@@ -105,7 +104,7 @@ def test_dense_conversation_routes_per_block_and_matches(spark):
     assert set(fused) == set(comp)
     bad = [k for k in comp if fused[k] != comp[k]]
     assert not bad, f"{len(bad)} blocks differ, e.g. {bad[:3]}"
-    # sanity: the dense conv really exceeded the routing threshold
+    # sanity: the dense conv packed its three dense day blocks
     assert sum(1 for (c, _) in fused if c == "conv-dense") == 3
 
 

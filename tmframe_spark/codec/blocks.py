@@ -39,12 +39,24 @@ XOR record (x = bits(v_i) ^ bits(v_{i-1})):
     '10'  + meaningful bits      x fits the previous (lz, tz) window
     '11'  + 6b lz + 6b (mlen-1) + mlen bits   new window
 
-Encode is numpy-vectorized end to end: the per-point analysis (dods, xors,
-leading/trailing zero counts) AND the bit packing — stream encoders emit a
-record plan (absolute bit offset + code + length) and _pack_bits OR-scatters
-all records into the output words in a handful of whole-array ops. Only the
-Gorilla window-reuse DECISIONS remain a (plan-only) scalar scan, and tiny
-blocks take pure-Python scalar twins that double as the packer's oracle.
+There are three encoders and one format:
+
+- ``encode_block`` encodes materialized arrays (``pack_blocks``). It is
+  numpy-vectorized end to end: the per-point analysis (dods, xors,
+  leading/trailing zero counts) and the bit packing — the stream encoders
+  emit a record plan (absolute bit offset + code + length) and _pack_bits
+  OR-scatters all records into the output words in a handful of
+  whole-array ops. Only the Gorilla window-reuse DECISIONS remain a
+  (plan-only) scan.
+- ``encode_blocks_gapfilled_batch`` encodes gap-filled blocks without
+  materializing their spines (``pack_rollup_blocks``): many blocks per
+  numpy pass, in consecutive whole-block slices of at most
+  ``BATCH_ROW_BUDGET`` data rows, so cost and memory per pass stay bounded
+  however long the conversation is.
+- ``encode_block_gapfilled`` is the pure-Python scalar twin of the
+  gap-filled encoder, one block at a time. No production path runs it; it
+  is the test oracle both vectorized encoders are held byte-identical to.
+
 Decode is a sequential bit reader (framing is data-dependent). Both ends are
 pure Python/numpy so the same code runs in the driver oracle and inside
 Spark pandas UDFs on executors.
@@ -54,6 +66,7 @@ from __future__ import annotations
 
 import struct
 import sys
+from typing import Iterator
 
 import numpy as np
 
@@ -73,14 +86,26 @@ BLOCK_VERSION = 1
 _U64 = np.uint64
 _I64 = np.int64
 
-# (prefix_bits, prefix_len, payload_bits) for dod classes; tried in order.
-_DOD_CLASSES = (
-    (0b10, 2, 7),
-    (0b110, 3, 12),
-    (0b1110, 4, 18),
-    (0b11110, 5, 32),
-    (0b11111, 5, 64),
-)
+#: max data rows per encode_blocks_gapfilled_batch pass (a block holding
+#: more is encoded in a pass of its own). One unsliced pass over a
+#: decade-long 1m conversation at 27% density (3,650 day blocks, 1.4M rows)
+#: peaked at 1.51 GB RSS and took 2.94 s; in 2^15-row passes it peaked at
+#: 148 MB and took 1.75 s (medians of 7, one core of a 4-vCPU box, numpy
+#: 1.26).
+BATCH_ROW_BUDGET = 1 << 15
+
+
+def budget_slices(sizes, budget: int) -> Iterator[tuple[int, int]]:
+    """Consecutive ``[start, end)`` runs of items whose summed ``sizes``
+    stay within ``budget``; an item over the budget forms a run alone."""
+    csum = np.cumsum(np.asarray(sizes, dtype=np.int64))
+    n, start = len(csum), 0
+    while start < n:
+        base = int(csum[start - 1]) if start else 0
+        end = int(np.searchsorted(csum, base + budget, side="right"))
+        end = min(max(end, start + 1), n)
+        yield start, end
+        start = end
 
 
 class _BitWriter:
@@ -552,16 +577,6 @@ def _emit_dod_record(w: _BitWriter, dod: int) -> None:
     w.write(dod, pb)
 
 
-def _lookup_sparse(idx: np.ndarray, vals: np.ndarray, pos: np.ndarray, zero):
-    """x[pos] for the sparse series x (x[idx]=vals, 0 elsewhere)."""
-    out = np.full(len(pos), zero, dtype=vals.dtype)
-    ins = np.searchsorted(idx, pos)
-    ok = (ins < len(idx)) & (pos >= 0)
-    ok[ok] &= idx[ins[ok]] == pos[ok]
-    out[ok] = vals[ins[ok]]
-    return out
-
-
 def _encode_regular_ts(w: _BitWriter, t0: int, step: int, n: int) -> None:
     """ts stream for a perfectly regular spine t0 + i*step — O(1) records."""
     w.write(int(t0), 64)
@@ -572,25 +587,6 @@ def _encode_regular_ts(w: _BitWriter, t0: int, step: int, n: int) -> None:
         w.write_zero_bits(n - 2)  # all later dods are zero
 
 
-def _ts_regular_records(t0: int, step: int, n: int):
-    """Record-plan twin of _encode_regular_ts (O(1) records either way)."""
-    if n == 1:
-        return (
-            np.zeros(1, dtype=np.int64),
-            np.array([t0 & _M64], dtype=_U64),
-            np.full(1, 64, dtype=np.int64),
-            64,
-        )
-    pb = _dod_class_scalar(step)
-    pre, plen = _PREFIX_FOR[pb]
-    return (
-        np.array([0, 64, 64 + plen], dtype=np.int64),
-        np.array([t0 & _M64, pre, step & ((1 << pb) - 1)], dtype=_U64),
-        np.array([64, plen, pb], dtype=np.int64),
-        64 + plen + pb + (n - 2),
-    )
-
-
 def _wrap64(v: int) -> int:
     """Two's-complement int64 wrap for pure-Python arithmetic (matches
     numpy int64 overflow semantics in the vectorized paths)."""
@@ -598,9 +594,9 @@ def _wrap64(v: int) -> int:
 
 
 def _encode_dod_sparse_small(w: _BitWriter, n: int, idx_l: list, vals_l: list) -> None:
-    """Pure-Python twin of _encode_dod_sparse for tiny idx — skips ~10
-    small-array numpy calls per block (the dominant cost for blocks holding
-    a handful of points)."""
+    """dod stream of the sparse int series x (x[idx_l]=vals_l, 0 elsewhere)
+    over n slots, one record at a time: nonzero records only occur within
+    +-1 of a data point, so the cost is O(len(idx_l)) plus n/8 zero bytes."""
     lookup = dict(zip(idx_l, vals_l))
     first = lookup.get(0, 0)
     w.write(first, 64)
@@ -630,7 +626,8 @@ def _encode_dod_sparse_small(w: _BitWriter, n: int, idx_l: list, vals_l: list) -
 
 
 def _encode_xor_sparse_small(w: _BitWriter, n: int, idx_l: list, bits_l: list) -> None:
-    """Pure-Python twin of _encode_xor_sparse for tiny idx."""
+    """Gorilla XOR stream of the sparse float series (bits x[idx_l]=bits_l,
+    0.0 elsewhere) over n slots, one record at a time."""
     lookup = dict(zip(idx_l, bits_l))
     w.write(lookup.get(0, 0), 64)
     if n == 1:
@@ -663,111 +660,49 @@ def _encode_xor_sparse_small(w: _BitWriter, n: int, idx_l: list, bits_l: list) -
         w.write_zero_bits(n - 1 - cursor)
 
 
-def _dod_records_sparse(n: int, idx: np.ndarray, vals: np.ndarray):
-    """Record plan for the dod stream of the sparse int series x (x[idx]=vals,
-    0 elsewhere), byte-identical to _dod_records_dense on the materialized
-    array but O(len(idx)) — nonzero dod records only occur within +-1 of
-    data points."""
-    first = int(vals[0]) if len(idx) and idx[0] == 0 else 0
-    if n == 1:
-        return _dod_stream_records(first, _EMPTY_I64, _EMPTY_I64, 1)
-    # record j (0..n-2): j=0 -> x1-x0; j>=1 -> x[j+1]-2x[j]+x[j-1]
-    cand = np.unique(np.concatenate([idx - 1, idx, idx + 1]))
-    cand = cand[(cand >= 0) & (cand <= n - 2)]
-    if len(cand) == 0:
-        return _dod_stream_records(first, _EMPTY_I64, _EMPTY_I64, n)
-    xp1 = _lookup_sparse(idx, vals, cand + 1, 0)
-    x0 = _lookup_sparse(idx, vals, cand, 0)
-    xm1 = _lookup_sparse(idx, vals, cand - 1, 0)
-    rec = np.where(cand == 0, xp1 - x0, xp1 - _I64(2) * x0 + xm1)
-    nzm = rec != 0
-    return _dod_stream_records(first, cand[nzm], rec[nzm], n)
-
-
-def _xor_records_sparse(n: int, idx: np.ndarray, vals: np.ndarray):
-    """Record plan for the XOR stream of the sparse float series — O(len(idx))."""
-    bits_vals = np.asarray(vals, dtype=np.float64).view(_U64)
-    zero_bits = _U64(0)  # bits(0.0) == 0
-    first = int(bits_vals[0]) if len(idx) and idx[0] == 0 else 0
-    if n == 1:
-        return _xor_stream_records(first, _EMPTY_I64, _EMPTY_I64, _EMPTY_I64, _EMPTY_I64, 1)
-    # record j (0..n-2): xor of x[j+1] ^ x[j] — nonzero only near data points
-    cand = np.unique(np.concatenate([idx - 1, idx]))
-    cand = cand[(cand >= 0) & (cand <= n - 2)]
-    if len(cand) == 0:
-        return _xor_stream_records(first, _EMPTY_I64, _EMPTY_I64, _EMPTY_I64, _EMPTY_I64, n)
-    xp1 = _lookup_sparse(idx, bits_vals, cand + 1, zero_bits)
-    x0 = _lookup_sparse(idx, bits_vals, cand, zero_bits)
-    xors = xp1 ^ x0
-    nzm = xors != 0
-    jv = cand[nzm]
-    xv = xors[nzm]
-    lzs = np.minimum(_clz64(xv), 63)
-    tzs = _ctz64(xv)
-    return _xor_stream_records(first, jv, xv, lzs, tzs, n)
-
-
 def encode_block_gapfilled(
     t0: int, step: int, n: int, idx, v0_vals=None, v1_vals=None
 ) -> bytes:
-    """Encode the gap-filled block WITHOUT materializing the spine.
+    """Encode one gap-filled block without materializing its spine, in pure
+    Python — the scalar twin of ``encode_blocks_gapfilled_batch``.
 
-    Semantically identical (byte-for-byte; asserted by tests) to
-    encode_block(t0 + arange(n)*step, scatter(v0), scatter(v1)) where
-    scatter places the values at spine positions ``idx`` and zero elsewhere —
-    but O(len(idx)) instead of O(n). This is what makes gap-fill free at
-    10^12-turn scale: a conversation's empty days cost bytes, not CPU.
+    Byte-identical to encode_block(t0 + arange(n)*step, scatter(v0),
+    scatter(v1)), where scatter places the values at spine positions
+    ``idx`` and zero elsewhere, and to a one-block batch call (both asserted
+    by tests/test_blocks.py). No production path runs it: it is the oracle
+    the two vectorized encoders are tested against.
     """
     if n <= 0:
         raise ValueError("empty block")
-    idx = np.asarray(idx, dtype=_I64)
+    idx_l = np.asarray(idx, dtype=_I64).tolist()
     flags = (1 if v0_vals is not None else 0) | (2 if v1_vals is not None else 0)
-    header = BLOCK_MAGIC + struct.pack("<BBI", BLOCK_VERSION, flags, n)
-    if len(idx) <= 24:
-        # tiny blocks: pure-Python scalar twins skip the per-block numpy
-        # ceremony (and double as the living oracle for the vectorized
-        # packer — tests/test_blocks.py asserts byte-identity across the
-        # threshold)
-        w = _BitWriter()
-        _encode_regular_ts(w, t0, step, n)
-        idx_l = idx.tolist()
-        if v0_vals is not None:
-            bits_l = np.asarray(v0_vals, dtype=np.float64).view(_U64).tolist()
-            _encode_xor_sparse_small(w, n, idx_l, bits_l)
-        if v1_vals is not None:
-            _encode_dod_sparse_small(
-                w, n, idx_l, np.asarray(v1_vals, dtype=_I64).tolist()
-            )
-        return header + w.finish()
-    streams = [_ts_regular_records(t0, step, n)]
+    w = _BitWriter()
+    _encode_regular_ts(w, t0, step, n)
     if v0_vals is not None:
-        streams.append(_xor_records_sparse(n, idx, v0_vals))
+        bits_l = np.asarray(v0_vals, dtype=np.float64).view(_U64).tolist()
+        _encode_xor_sparse_small(w, n, idx_l, bits_l)
     if v1_vals is not None:
-        streams.append(_dod_records_sparse(n, idx, np.asarray(v1_vals, dtype=_I64)))
-    return header + _pack_streams(streams)
+        _encode_dod_sparse_small(w, n, idx_l, np.asarray(v1_vals, dtype=_I64).tolist())
+    return BLOCK_MAGIC + struct.pack("<BBI", BLOCK_VERSION, flags, n) + w.finish()
 
 
 def encode_blocks_gapfilled_batch(
     t0s, step: int, ns, bids, idx, v0_vals, v1_vals
 ) -> list:
-    """Encode MANY gap-filled blocks (one conversation's worth) in ONE
-    vectorized pass — byte-for-byte identical to calling
-    ``encode_block_gapfilled`` per block (asserted by
-    tests/test_blocks.py::test_batch_encode_matches_per_block).
+    """Encode MANY gap-filled blocks in vectorized passes — byte-for-byte
+    identical to calling ``encode_block_gapfilled`` per block (asserted by
+    tests/test_blocks.py).
 
     Per-block processing has a hard floor of ~90 us/block in numpy call
     overhead (~30 small-array ops each), which at soak scale (>10^6 blocks
-    per run) dominates the whole pack stage. Here every per-stream analysis
-    runs once over the conversation's concatenated data — candidate slots
-    via a keyed unique (block_id * stride + slot), value lookups via ONE
-    searchsorted against the keyed data positions, within-block record
-    ranks/offsets via segmented cumsums — and all blocks' records are
-    OR-scattered into one shared word buffer (blocks are byte-aligned, so
-    slicing the buffer yields each block's padded bitstream). Only the
-    Gorilla window-reuse decision remains a linear scalar scan, resetting at
-    block boundaries exactly like the per-block encoder's fresh writer.
+    per run) dominates the whole pack stage, so each pass encodes many
+    blocks at once. Every block encodes independently, so the blocks are
+    cut into consecutive whole-block slices of at most ``BATCH_ROW_BUDGET``
+    data rows (``budget_slices``) and each slice is one pass: a pass's cost
+    and memory stay bounded however many rows the caller hands over, and
+    the bytes do not depend on where the cuts fall.
 
-    Args (arrays, one conversation):
+    Args (arrays):
       t0s   int64[nb]  per-block first spine timestamp (ns)
       step  int        spine step (ns), shared by every block (one tier)
       ns    int64[nb]  per-block spine point count, all > 0
@@ -788,6 +723,29 @@ def encode_blocks_gapfilled_batch(
         return []
     if (ns <= 0).any():
         raise ValueError("empty block")
+    rows = np.bincount(bids, minlength=nb)
+    row_at = np.concatenate(([0], np.cumsum(rows))).tolist()
+    out = []
+    for lo, hi in budget_slices(rows, BATCH_ROW_BUDGET):
+        r = slice(row_at[lo], row_at[hi])
+        out += _encode_batch_pass(
+            t0s[lo:hi], step, ns[lo:hi], bids[r] - lo, idx[r], v0b[r], v1v[r]
+        )
+    return out
+
+
+def _encode_batch_pass(t0s, step: int, ns, bids, idx, v0b, v1v) -> list:
+    """One vectorized pass of encode_blocks_gapfilled_batch (same arrays,
+    v0 as uint64 bits, ``bids`` counted from 0). Every per-stream analysis
+    runs once over the blocks' concatenated data — candidate slots via a
+    keyed unique (block_id * stride + slot), value lookups via ONE
+    searchsorted against the keyed data positions, within-block record
+    ranks/offsets via segmented cumsums — and all blocks' records are
+    OR-scattered into one shared word buffer (blocks are byte-aligned, so
+    slicing the buffer yields each block's padded bitstream). Only the
+    Gorilla window-reuse decision remains a linear scalar scan, resetting at
+    block boundaries exactly like the scalar twin's fresh writer."""
+    nb = len(t0s)
     R = len(bids)
     stride = int(ns.max()) + 2
     dk = bids * stride + idx + 1  # strictly increasing data-slot keys

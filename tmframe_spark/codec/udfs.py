@@ -34,9 +34,9 @@ from pyspark.sql.types import (
 )
 
 from tmframe_spark.codec.blocks import (
+    budget_slices,
     decode_block,
     encode_block,
-    encode_block_gapfilled,
     encode_blocks_gapfilled_batch,
     peek_block_n_points,
 )
@@ -234,9 +234,11 @@ def pack_rollup_blocks(
     the conv's global [first, last] span), so the hot conversation is the
     stage's potential straggler — but its cost is CALENDAR-bounded, not
     data-bounded: a fully dense conv-year at 1m is 525k spine points,
-    ≈1.2 s of dense encode + marshal on one core (3,650 dense day blocks
-    measured at 11.8 s), so a decade-long always-active conversation
-    costs ~12 s serial in one task (coarser tiers proportionally less).
+    ≈0.3 s of encode + marshal on one core of a 4-vCPU box (3,650 dense
+    day blocks measured at 3.2 s), so a decade-long always-active
+    conversation costs a few seconds serial in one task (coarser tiers
+    proportionally less); the encoder works through it in bounded-row
+    slices, so the encoder's working memory does not grow with it.
     Packing that conversation's calendar chunks in parallel, behind a
     checkpoint, a span aggregate and a second shuffle, did not beat this
     one pass at local[4] (10-year dense 1m conversation + 31 small ones,
@@ -303,15 +305,12 @@ def pack_rollup_blocks(
         calendar groups between them — the first starts at ``t0``, the last
         ends at ``hi``, and every empty calendar group between them packs
         its all-zero block. Block extents and each row's (block, block-local
-        slot) are computed arithmetically for all groups at once. Encoder
-        choice per group: above 400 data rows per block (e.g. the hot
-        conversation at fine tiers) each block encodes alone with the
-        whole-array encoder, which beats the keyed-segmented pass there (measured
-        crossover ~400); every other block goes through ONE
-        encode_blocks_gapfilled_batch call (per-block independent: its only
-        sequential piece, the Gorilla window scan, resets at every block
-        boundary). The two encoders are byte-identical, and bytes are
-        asserted identical to gap_fill->pack_blocks by tests/test_pack_fused.
+        slot) are computed arithmetically for all groups at once, and ONE
+        encode_blocks_gapfilled_batch call encodes every block, in
+        whole-block slices of bounded data rows (blocks are independent:
+        the only sequential piece, the Gorilla window scan, resets at every
+        block boundary). Bytes are asserted identical to
+        gap_fill->pack_blocks by tests/test_pack_fused.
 
         conv: per-row group conv ids (only rows < cstarts[-1] used);
         ts/a0/a1: CLOSED rows only; cstarts/cends: row ranges of the closed
@@ -336,38 +335,9 @@ def pack_rollup_blocks(
         row_blk = blk_first[row_grp] + (group_of(ts) - g_first[row_grp])
         local = (ts - t0[row_grp]) // step - starts_b[row_blk]
 
-        alone = np.repeat(counts > 400 * nb_c, nb_c)
-        blocks = [None] * B
-        ids = np.flatnonzero(alone)
-        for b, lo, up in zip(
-            ids.tolist(),
-            np.searchsorted(row_blk, ids, "left").tolist(),
-            np.searchsorted(row_blk, ids, "right").tolist(),
-        ):
-            blocks[b] = encode_block_gapfilled(
-                int(block_t0s[b]),
-                step,
-                int(ns_b[b]),
-                local[lo:up],
-                a0[lo:up],
-                a1[lo:up],
-            )
-        batched = np.flatnonzero(~alone)
-        rows = ~alone[row_blk]
-        batch_id = np.cumsum(~alone) - 1
-        for b, block in zip(
-            batched.tolist(),
-            encode_blocks_gapfilled_batch(
-                block_t0s[batched],
-                step,
-                ns_b[batched],
-                batch_id[row_blk[rows]],
-                local[rows],
-                a0[rows],
-                a1[rows],
-            ),
-        ):
-            blocks[b] = block
+        blocks = encode_blocks_gapfilled_batch(
+            block_t0s, step, ns_b, row_blk, local, a0, a1
+        )
         return pd.DataFrame(
             {
                 "conv_id": np.repeat(conv[cstarts], nb_c),
@@ -478,19 +448,11 @@ def unpack_blocks(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            csum = np.fromiter(
-                (peek_block_n_points(x) for x in pdf["frame"]), np.int64, n
-            ).cumsum()
-            start = 0
-            while start < n:
-                base = int(csum[start - 1]) if start else 0
-                end = int(np.searchsorted(csum, base + PTS_BUDGET, side="right"))
-                end = min(max(end, start + 1), n)  # an oversize block rides alone
+            pts = np.fromiter(
+                (peek_block_n_points(x) for x in pdf["frame"]), np.int64, len(pdf)
+            )
+            for start, end in budget_slices(pts, PTS_BUDGET):
                 sl = pdf.iloc[start:end]
-                start = end
                 ts_l, v0_l, v1_l = zip(*_decoded_blocks(sl["frame"]))
                 reps = [len(ts) for ts in ts_l]
                 d = {k: np.repeat(sl[k].to_numpy(), reps) for k in keys}
